@@ -18,13 +18,27 @@ Architecture (see SURVEY.md):
 - ``fixtures``    — seeded synthetic Common-Crawl-style ``pages`` table
                     generator (url, warc_ts, html, text, lang).
 - ``pipeline``    — the Spark job: scan -> salted repartition ->
-                    mapInPandas(extract kernel) -> partitioned output
+                    mapInArrow(extract kernel) -> partitioned output
                     with per-partition lineage rows and a checkpoint
                     manifest for exactly-once resume.
 - ``metrics``     — Spark-side detection-metrics harness (IoU match,
                     TP/FP cumsum windows, AP aggregation).
 - ``session``     — SparkSession builder with the tuned configs
-                    (AQE, shuffle partitions, Arrow batch sizing).
+                    (AQE, shuffle partitions, Arrow batch sizing), and
+                    ``local_df``, the Arrow-built frame for driver-side
+                    rows.
+
+Requires Python >= 3.11 (checked at import).
 """
+
+import sys
+
+if sys.version_info < (3, 11):
+    raise ImportError(
+        "doclayout_yolo_spark requires Python >= 3.11: the HTML attribute "
+        "scanner (extract._ATTRS) uses possessive regex quantifiers, which "
+        "the re module supports from 3.11 and which keep it linear-time "
+        "on hostile, unterminated tags"
+    )
 
 __version__ = "0.1.0"

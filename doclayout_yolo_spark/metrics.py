@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .kernels import box_iou
+from .session import local_df
 
 IOU_THRESHOLDS = np.round(np.arange(0.5, 1.0, 0.05), 2)  # 10 thresholds
 
@@ -370,22 +371,24 @@ def ap_per_class(
     # rows for them (anti-join against the tiny cached ap output keeps
     # this distributed and avoids re-deriving classes from matches)
     spark = matches.sparkSession
-    thr = spark.createDataFrame(
+    thr = local_df(
+        spark,
         [(i, float(IOU_THRESHOLDS[i])) for i in range(t)],
-        schema="iou_idx int, iou_thr double",
+        "iou_idx int, iou_thr double",
     )
     if lazy:
         zeros = counts.crossJoin(thr).select(
             "cls", "iou_idx", "iou_thr", F.lit(0.0).alias("ap")
         )
     else:
-        zeros = spark.createDataFrame(
+        zeros = local_df(
+            spark,
             [
                 (int(c), i, float(IOU_THRESHOLDS[i]), 0.0)
                 for c in sorted(gt_b)
                 for i in range(t)
             ],
-            schema=AP_DDL,
+            AP_DDL,
         )
     missing = zeros.join(ap.select("cls").distinct(), "cls", "left_anti")
     return ap.unionByName(missing)

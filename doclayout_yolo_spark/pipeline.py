@@ -11,6 +11,10 @@ Plan (SURVEY §3.1 Spark rendering):
     + per-task lineage rows via accumulator -> lineage parquet
     + manifest rows (one per completed bucket) -> manifest parquet
 
+Lineage and manifest rows are built on the driver and committed from
+Arrow-built local frames (``session.local_df``): the plan is a
+JVM-only LocalTableScan, so a commit runs no Python worker task.
+
 At 100 TB this maps 1:1 onto an Iceberg table: ``part_id`` becomes the
 ``bucket(url)`` partition transform, the manifest+data write becomes a
 single atomic snapshot commit, and resume prunes scanned files by
@@ -34,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import KERNEL_VERSION, extract_document, extract_documents
+from .session import local_df
 from .tableformat import FORMAT, TOMBSTONE
 
 SPANS_DDL = (
@@ -252,17 +257,21 @@ def extract_pages(
     cannot feed every core (e.g. a single-split upstream scan); the
     bucket-grouped layout the Iceberg-style sink wants is established
     by ``run_extraction_job``'s own repartition before its partitioned
-    write, which is unchanged."""
+    write, which is unchanged.  An explicit ``num_partitions`` is always
+    honoured (one exchange to exactly that many partitions); the probe
+    runs only when it is ``None``."""
     pruned = df.select("url", "html")  # never ship text/lang into the kernel (P3)
     bucketed = with_part_id(pruned, n_buckets)
-    sc = df.sparkSession.sparkContext
-    try:
-        cur = bucketed.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — planning quirk: keep the shuffle
-        cur = 0
-    if cur < sc.defaultParallelism:
-        parts = num_partitions or sc.defaultParallelism
-        bucketed = bucketed.repartition(parts, "part_id")
+    if num_partitions is not None:
+        bucketed = bucketed.repartition(num_partitions, "part_id")
+    else:
+        sc = df.sparkSession.sparkContext
+        try:
+            cur = bucketed.rdd.getNumPartitions()
+        except Exception:  # noqa: BLE001 — planning quirk: keep the shuffle
+            cur = 0
+        if cur < sc.defaultParallelism:
+            bucketed = bucketed.repartition(sc.defaultParallelism, "part_id")
     return bucketed.mapInArrow(
         lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
     )
@@ -328,7 +337,8 @@ def _dedup_lineage(rows) -> list[dict]:
 def _write_lineage(spark: SparkSession, lineage_rows: list[dict], output_path: str) -> None:
     if not lineage_rows:
         return
-    spark.createDataFrame(
+    local_df(
+        spark,
         [
             (
                 r["task_partition_id"], r["attempt_number"],
@@ -341,7 +351,7 @@ def _write_lineage(spark: SparkSession, lineage_rows: list[dict], output_path: s
             )
             for r in lineage_rows
         ],
-        schema=LINEAGE_DDL,
+        LINEAGE_DDL,
     ).write.mode("append").parquet(_lineage_path(output_path))
 
 
@@ -500,12 +510,18 @@ def snapshot_diff(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:
     full-outer hash join on the url key — no windows, no collect; the
     generic twin of the fixture-bound ``crawl_snapshot_diff`` contract
     query (queries_curation.py)."""
-    cur = new_pages.select("url", F.md5(F.col("html")).alias("cur_md5"))
-    prev = old_pages.select("url", F.md5(F.col("html")).alias("prev_md5"))
+    # presence flags, not md5 nullness, decide added/removed: a page
+    # whose html is null is still present in its snapshot
+    cur = new_pages.select(
+        "url", F.md5(F.col("html")).alias("cur_md5"), F.lit(True).alias("in_cur")
+    )
+    prev = old_pages.select(
+        "url", F.md5(F.col("html")).alias("prev_md5"), F.lit(True).alias("in_prev")
+    )
     status = (
-        F.when(F.col("prev_md5").isNull(), "added")
-        .when(F.col("cur_md5").isNull(), "removed")
-        .when(F.col("cur_md5") == F.col("prev_md5"), "unchanged")
+        F.when(F.col("in_prev").isNull(), "added")
+        .when(F.col("in_cur").isNull(), "removed")
+        .when(F.col("cur_md5").eqNullSafe(F.col("prev_md5")), "unchanged")
         .otherwise("changed")
     )
     return cur.join(prev, "url", "full_outer").select(
@@ -530,31 +546,32 @@ def run_incremental_job(
     delete-file action an Iceberg snapshot commit would record).
     Untouched buckets are never read, never rewritten.
 
-    Cost at crawl scale: one url-hash join (the diff) + extraction
-    proportional to CHANGED content, not corpus size — the whole point
-    of incremental ingestion at 10^12 documents."""
-    # persisted: the status counts and the affected-bucket collect
-    # both consume the diff, and the full-outer md5 join over two
-    # snapshots is the dominant non-extraction cost at crawl scale —
-    # paying it twice would double it
-    diff = snapshot_diff(old_pages, new_pages).persist()
-    counts = {
-        r["status"]: r["count"]
-        for r in diff.groupBy("status").count().collect()
-    }
-    affected = (
-        with_part_id(diff.filter(F.col("status") != "unchanged"), n_buckets)
-        .select("part_id")
-        .distinct()
+    Cost at crawl scale: one url-hash join (the diff, aggregated once
+    per (bucket, status)) + extraction proportional to CHANGED
+    content, not corpus size — the whole point of incremental
+    ingestion at 10^12 documents."""
+    # ONE aggregation answers everything the driver needs: per-status
+    # counts, the touched buckets (any non-unchanged url) and the live
+    # buckets (any url still present in the new snapshot).  Bounded by
+    # 4 x n_buckets rows — dimension-sized, never corpus-sized — and the
+    # full-outer md5 join runs once, with no persist and no re-scan of
+    # the new snapshot.
+    agg = (
+        with_part_id(snapshot_diff(old_pages, new_pages), n_buckets)
+        .groupBy("part_id", "status")
+        .count()
         .collect()
-    )  # bounded by n_buckets — dimension-sized, never corpus-sized
-    diff.unpersist(blocking=False)
-    stale = sorted(r["part_id"] for r in affected)
+    )
+    counts: dict[str, int] = {}
+    for r in agg:
+        counts[r["status"]] = counts.get(r["status"], 0) + r["count"]
+    stale = sorted({r["part_id"] for r in agg if r["status"] != "unchanged"})
+    live = {r["part_id"] for r in agg if r["status"] != "removed"}
     result = {
-        "n_added": int(counts.get("added", 0)),
-        "n_removed": int(counts.get("removed", 0)),
-        "n_changed": int(counts.get("changed", 0)),
-        "n_unchanged": int(counts.get("unchanged", 0)),
+        "n_added": counts.get("added", 0),
+        "n_removed": counts.get("removed", 0),
+        "n_changed": counts.get("changed", 0),
+        "n_unchanged": counts.get("unchanged", 0),
         "n_buckets_reprocessed": len(stale),
         "n_docs": 0,
     }
@@ -581,10 +598,6 @@ def run_incremental_job(
     # leave completed_buckets permanently claiming a bucket that has no
     # data directory, indistinguishable from a committed one at the
     # next _reconcile_orphans pass (r4 advisor finding)
-    live = {
-        r["part_id"]
-        for r in bucketed.select("part_id").distinct().collect()
-    }
     emptied = [p for p in stale if p not in live]
     for p in emptied:
         FORMAT.delete_partition_dir(output_path, p)

@@ -23,6 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .scan import read_parquet, spread
+from .session import local_df
 
 # engine-agnostic 60-bit md5 hash (see duckdb-spark parity rules)
 _H_SPARK = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
@@ -407,8 +408,8 @@ def url_policy_filter(spark, sf_dir):
         F.lit("/page/"), F.col("doc_id").cast("string"),
     )
     urls = d.select("doc_id", host.alias("host"), path.alias("path"))
-    rules = spark.createDataFrame(
-        _POLICY_RULES, schema="r_host string, prefix string, action string"
+    rules = local_df(
+        spark, _POLICY_RULES, "r_host string, prefix string, action string"
     )
     matched = urls.join(
         F.broadcast(rules),
@@ -789,7 +790,8 @@ def bpe_learn_from_words(spark, words, k: int):
             .agg(F.sum("cnt").alias("cnt"))
             .localCheckpoint(eager=True)
         )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         merges,
         "merge_rank int, lhs string, rhs string, new_token string,"
         " pair_count bigint",

@@ -15,6 +15,7 @@ from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .scan import read_parquet, spread
+from .session import local_df
 
 TOPK = 3
 N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -1037,9 +1038,7 @@ def _adc_tables(spark, query_rows, cb: np.ndarray):
         for m in range(PQ_M)
         for c in range(PQ_KSUB)
     ]
-    return spark.createDataFrame(
-        dt_rows, schema="query_id long, m int, code int, d2 double"
-    )
+    return local_df(spark, dt_rows, "query_id long, m int, code int, d2 double")
 
 
 def _topk_by_dist(scored):
@@ -1100,13 +1099,14 @@ def ann_ivf_pq_topk(spark, sf_dir, nprobe: int = 1):
         key=lambda r: r["vec_id"],
     )
     dt = _adc_tables(spark, qrows, cb)
-    q_probe = spark.createDataFrame(
+    q_probe = local_df(
+        spark,
         [
             (int(r["vec_id"]), int(r[c]))
             for r in qrows
             for c in _PROBE_COLS[:nprobe]
         ],
-        schema="query_id long, cell int",
+        "query_id long, cell int",
     )
     enc = _pq_encoded(assigned.select("vec_id", "vec"), cb).join(
         assigned.select("vec_id", "cell"), "vec_id"

@@ -12,13 +12,18 @@ identical settings:
   Arrow round-trips; per-batch memory stays ~30 MB at Common-Crawl
   page weight, far under executor headroom; 4096 regressed again —
   worse pipelining).
+
+``local_df`` is the one way driver-side rows (lineage, manifest,
+small dimension tables) become a DataFrame: built as an Arrow table,
+so the plan is a JVM-only ``LocalTableScan`` and no Python worker
+task runs for rows that never need Python.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 ARROW_BATCH_ROWS = 1024
 
@@ -65,3 +70,25 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-side row tuples -> a DataFrame typed by ``ddl``.
+
+    ``createDataFrame(<python list>)`` goes ``sc.parallelize`` ->
+    ``applySchemaToPythonRDD``: one Python worker task per
+    default-parallelism slice, each paying the worker's start-up cost
+    (and, on first use, a second worker daemon).  An Arrow table
+    typed from the DDL crosses once, driver to JVM, and plans as a
+    ``LocalTableScan`` with no ``PythonRDD`` in its lineage."""
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import _parse_datatype_string  # noqa: PLC0415
+
+    schema = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

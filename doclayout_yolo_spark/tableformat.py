@@ -51,10 +51,14 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import local_df
+
 #: manifest kernel_version marker for a bucket whose data partition was
 #: deleted (all its urls removed by an incremental update).  The analog
 #: of an Iceberg delete-files snapshot entry.
 TOMBSTONE = "__deleted__"
+
+MANIFEST_DDL = "part_id int, kernel_version string, seq double"
 
 
 class ParquetManifestFormat:
@@ -92,9 +96,8 @@ class ParquetManifestFormat:
             last = m.agg(F.max("seq")).collect()[0][0]
             if last is not None and now <= last:
                 now = last + 1e-3
-        spark.createDataFrame(
-            [(p, v, now) for p, v in rows],
-            schema="part_id int, kernel_version string, seq double",
+        local_df(
+            spark, [(p, v, now) for p, v in rows], MANIFEST_DDL
         ).write.mode("append").parquet(self.manifest_path(table_path))
 
     def read_manifest(

@@ -90,6 +90,7 @@ def main(stop_session: bool = True) -> None:
         extract_outlinks_df,
         pagerank_df,
     )
+    from doclayout_yolo_spark.session import local_df
 
     spark = SparkSession.builder.appName("doclayout-crawl").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -180,7 +181,7 @@ def main(stop_session: bool = True) -> None:
         delays = (
             crawl_delays_df(spark.read.parquet(args.robots))
             if args.robots
-            else spark.createDataFrame([], "host string, delay_s double")
+            else local_df(spark, [], "host string, delay_s double")
         )
         # only ALLOWED targets consume fetch slots: under
         # --keep-disallowed the blocked rows stay for audit but get

@@ -39,10 +39,18 @@ def snapshots(spark):
     return v1, v2
 
 
+_COLS = (
+    "url", "extracted_text", "spans", "n_regions", "n_blocks", "page_h",
+    "error",
+)
+
+
 def _rows(spark, out_dir):
+    """Every output column per url (urls are unique in a committed
+    table, so the url alone orders the rows)."""
     return sorted(
-        (r["url"], r["extracted_text"])
-        for r in read_extracted(spark, out_dir).select("url", "extracted_text").collect()
+        (tuple(r) for r in read_extracted(spark, out_dir).select(*_COLS).collect()),
+        key=lambda t: t[0],
     )
 
 
@@ -56,6 +64,23 @@ def test_snapshot_diff_statuses(spark, snapshots):
     assert counts["changed"] == 20
     assert counts["added"] == 60  # ids 300..359
     assert counts["unchanged"] == 260
+
+
+def test_snapshot_diff_null_html_is_present(spark):
+    """A page whose html is null is still in its snapshot: the diff
+    decides added/removed by presence, not by a null content hash."""
+    ddl = "url string, html binary"
+    old = spark.createDataFrame(
+        [("a", b"x"), ("b", b"y"), ("c", None), ("e", b"z")], ddl
+    )
+    new = spark.createDataFrame(
+        [("a", None), ("b", b"y"), ("c", None), ("d", None)], ddl
+    )
+    got = {r["url"]: r["status"] for r in snapshot_diff(old, new).collect()}
+    assert got == {
+        "a": "changed", "b": "unchanged", "c": "unchanged", "d": "added",
+        "e": "removed",
+    }
 
 
 def test_incremental_equals_full_reextraction(spark, snapshots, tmp_path_factory):
@@ -72,8 +97,8 @@ def test_incremental_equals_full_reextraction(spark, snapshots, tmp_path_factory
     assert _rows(spark, out) == _rows(spark, ref)
     # the changed docs really carry the v2 paragraph
     changed_txt = [
-        t for (_u, t) in _rows(spark, out)
-        if "updated paragraph appended in the v2 crawl" in t
+        r for r in _rows(spark, out)
+        if "updated paragraph appended in the v2 crawl" in r[1]
     ]
     assert len(changed_txt) == 20
 
@@ -142,3 +167,34 @@ def test_emptied_bucket_partition_is_deleted(spark, snapshots, tmp_path_factory)
     assert os.path.exists(os.path.join(data_path(out), f"part_id={victim}"))
     urls3 = {r["url"] for r in read_extracted(spark, out).select("url").collect()}
     assert urls3 == {r["url"] for r in v1.select("url").collect()}
+
+
+def test_null_html_page_keeps_its_bucket_live(spark, snapshots, tmp_path_factory):
+    """A bucket whose only surviving page has null html is still live:
+    it is re-extracted and committed, never deleted or tombstoned."""
+    v1, _v2 = snapshots
+    out = str(tmp_path_factory.mktemp("incr") / "out")
+    ref = str(tmp_path_factory.mktemp("incr") / "ref")
+    run_extraction_job(spark, v1, out, n_buckets=N_BUCKETS)
+    victim = (
+        with_part_id(v1.select("url"), N_BUCKETS)
+        .groupBy("part_id").count().orderBy("count", "part_id").first()["part_id"]
+    )
+    doomed = sorted(
+        r["url"]
+        for r in with_part_id(v1.select("url"), N_BUCKETS)
+        .filter(F.col("part_id") == victim).collect()
+    )
+    keep = doomed[0]
+    v2 = v1.filter(~F.col("url").isin(doomed[1:])).withColumn(
+        "html",
+        F.when(F.col("url") == keep, F.lit(None).cast("binary")).otherwise(
+            F.col("html")
+        ),
+    )
+    stats = run_incremental_job(spark, v1, v2, out, n_buckets=N_BUCKETS)
+    assert stats["n_changed"] == 1
+    assert stats["n_removed"] == len(doomed) - 1
+    assert os.path.exists(os.path.join(data_path(out), f"part_id={victim}"))
+    run_extraction_job(spark, v2, ref, n_buckets=N_BUCKETS)
+    assert _rows(spark, out) == _rows(spark, ref)

@@ -65,14 +65,13 @@ def test_golden_byte_identity(spark, pages_df, golden):
 def test_parallelism_invariance(spark, pages_df, golden):
     """Same input at different partition counts -> identical output
     (per-document kernel never depends on batch composition)."""
-    a = {
-        r["url"]: r["extracted_text"]
-        for r in extract_pages(pages_df, num_partitions=2).collect()
-    }
-    b = {
-        r["url"]: r["extracted_text"]
-        for r in extract_pages(pages_df, num_partitions=13).collect()
-    }
+    a_df = extract_pages(pages_df, num_partitions=2)
+    b_df = extract_pages(pages_df, num_partitions=13)
+    # an explicit num_partitions is honoured, not overridden by the probe
+    assert a_df.rdd.getNumPartitions() == 2
+    assert b_df.rdd.getNumPartitions() == 13
+    a = {r["url"]: r["extracted_text"] for r in a_df.collect()}
+    b = {r["url"]: r["extracted_text"] for r in b_df.collect()}
     assert a == b
 
 
