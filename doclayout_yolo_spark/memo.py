@@ -1,23 +1,30 @@
-"""Session-scoped memo caches for expensive query-builder artifacts
-(persisted shingle tables, converged cluster labels, collected
-codebooks).
+"""The one session-scoped memo for expensive query-builder artifacts:
+parquet reader frames and their spread variants (scan.py), persisted
+shingle / gram tables, converged cluster labels, collected codebooks.
 
-One eviction policy, used by every cache (duplicating it drifted in
-round 4 — r4 review finding): a key is ``(applicationId, group,
-mtime)``; on lookup, entries from other (stopped) applications are
-dropped, and same-group entries with a different mtime are dropped as
-STALE (a fixture rewritten under the same path must never serve old
-data).  EVERY evicted value gets ``unpersist(blocking=False)`` when it
-supports it (no-op for ndarrays and checkpointed DataFrames) —
-including other-app entries: with two concurrently live SparkSessions
-in one process, dropping another app's entry without unpersisting
-would leak its persisted blocks (r4 advisor finding).  unpersist on a
-stopped context raises and is swallowed by the guard.
+``cached(spark, group, source, build)`` is the only entry point and
+``_CACHE`` the only dict.  A key is ``(applicationId, group,
+source_mtime(source))``; ``group`` names the artifact AND its inputs
+(``("shingles", sf_dir)``, ``("head_vectors", sf_dir, k)``), because
+every artifact shares the dict — a bare ``sf_dir`` would collide.
+
+One eviction policy (duplicating it drifted in round 4): on every call,
+entries from other (stopped) applications are dropped, and same-group
+entries with a different mtime are dropped as STALE (a fixture
+rewritten under the same path must never serve old data).  EVERY
+evicted value gets ``unpersist(blocking=False)`` when it supports it
+(no-op for ndarrays and reader frames) — including other-app entries:
+with two concurrently live SparkSessions in one process, dropping
+another app's entry without unpersisting would leak its persisted
+blocks.  unpersist on a stopped context raises and is swallowed by the
+guard.
 """
 
 from __future__ import annotations
 
 import os
+
+_CACHE: dict = {}
 
 
 def source_mtime(path: str) -> float:
@@ -27,13 +34,17 @@ def source_mtime(path: str) -> float:
         return -1.0
 
 
-def memo_lookup(cache: dict, app: str, group, mtime: float):
-    """(key, cached-or-None) after applying the eviction policy."""
-    key = (app, group, mtime)
-    for k in [k for k in cache if k[0] != app or (k[1] == group and k != key)]:
+def cached(spark, group, source: str, build):
+    """``build()``'s result, memoized under ``group`` for this
+    application and the current mtime of ``source``."""
+    app = spark.sparkContext.applicationId
+    key = (app, group, source_mtime(source))
+    for k in [k for k in _CACHE if k[0] != app or (k[1] == group and k != key)]:
         try:
-            cache[k].unpersist(blocking=False)
-        except Exception:
+            _CACHE[k].unpersist(blocking=False)
+        except Exception:  # noqa: BLE001 — ndarray / stopped context
             pass
-        del cache[k]
-    return key, cache.get(key)
+        del _CACHE[k]
+    if key not in _CACHE:
+        _CACHE[key] = build()
+    return _CACHE[key]

@@ -79,7 +79,7 @@ MATCH_DDL = "doc string, det_id long, cls long, conf double, " + ", ".join(
 )
 
 
-def _match_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _match_group(key, pdf):
     doc = key[0]
     # applyInPandas delivers rows in shuffle-arrival order, and the
     # np.unique dedup in greedy_match is POSITIONAL — sort both sides
@@ -222,7 +222,7 @@ def confusion_matrix(
         F.lit(0.0).alias("conf"), "cls", F.lit("gt").alias("side"),
     )
 
-    def _group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _group(key, pdf):
         # sort by id: the positional np.unique dedup must not depend on
         # shuffle arrival order (ties in IoU exist in real data)
         pdf = pdf.sort_values("det_id")
@@ -304,7 +304,7 @@ def ap_per_class(
     else:
         gt_b = {int(k): int(v) for k, v in gt_counts.items() if int(v) > 0}
 
-    def _ap_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _ap_group(key, pdf):
         cls = int(key[0])
         n_gt = int(pdf["n_gt"].iloc[0]) if lazy else gt_b.get(cls, 0)
         cols = {"cls": [], "iou_idx": [], "iou_thr": [], "ap": []}

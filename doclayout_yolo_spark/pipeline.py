@@ -37,7 +37,7 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import KERNEL_VERSION, extract_document, extract_documents
+from .extract import KERNEL_VERSION, extract_documents
 from .session import local_df
 from .tableformat import FORMAT, TOMBSTONE
 
@@ -64,22 +64,6 @@ class _ListAccum(AccumulatorParam):
     def addInPlace(self, a, b):
         a.extend(b)
         return a
-
-
-def _extract_one(url: str, raw: bytes, stage_acc: dict | None = None):
-    """Per-document quarantine wrapper (P9): a poisoned document must
-    yield an error row, never kill the task — at 10^12 documents a
-    one-in-a-billion parser bug would otherwise fail whole partitions."""
-    try:
-        text, regions, meta = extract_document(raw, stage_acc=stage_acc)
-        return text, regions, meta, None
-    except Exception as e:  # noqa: BLE001
-        return (
-            "",
-            [],
-            {"n_regions": 0, "n_blocks": 0, "page_h": 0.0},
-            f"{type(e).__name__}: {e}"[:500],
-        )
 
 
 def _extract_batches(batches, lineage_acc=None):
@@ -253,25 +237,17 @@ def extract_pages(
     needs the rows grouped by bucket — shuffling the html payloads
     here was pure overhead (guide §8: heavy opaque bytes must move at
     most once, and for a read-compute-discard query they need not move
-    at all).  The exchange is kept ONLY when the input's partitioning
-    cannot feed every core (e.g. a single-split upstream scan); the
-    bucket-grouped layout the Iceberg-style sink wants is established
-    by ``run_extraction_job``'s own repartition before its partitioned
-    write, which is unchanged.  An explicit ``num_partitions`` is always
-    honoured (one exchange to exactly that many partitions); the probe
-    runs only when it is ``None``."""
+    at all).  With ``num_partitions=None`` the kernel runs on the
+    input's own partitioning: a narrow fixture scan is widened where it
+    is read (``scan.table(..., spread=True)``), and the bucket-grouped
+    layout the Iceberg-style sink wants is established by
+    ``run_extraction_job``'s own repartition before its partitioned
+    write.  An explicit ``num_partitions`` is always honoured (one
+    exchange to exactly that many partitions)."""
     pruned = df.select("url", "html")  # never ship text/lang into the kernel (P3)
     bucketed = with_part_id(pruned, n_buckets)
     if num_partitions is not None:
         bucketed = bucketed.repartition(num_partitions, "part_id")
-    else:
-        sc = df.sparkSession.sparkContext
-        try:
-            cur = bucketed.rdd.getNumPartitions()
-        except Exception:  # noqa: BLE001 — planning quirk: keep the shuffle
-            cur = 0
-        if cur < sc.defaultParallelism:
-            bucketed = bucketed.repartition(sc.defaultParallelism, "part_id")
     return bucketed.mapInArrow(
         lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
     )

@@ -18,21 +18,15 @@ files.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .scan import read_parquet, spread
+from . import scan
 from .session import local_df
 
 # engine-agnostic 60-bit md5 hash (see duckdb-spark parity rules)
 _H_SPARK = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 _H_DUCK = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
-
-
-def _docs(spark: SparkSession, sf_dir: str):
-    # spread: single-row-group fixture file — keep the map stage wide
-    return spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
 
 
 # --- paragraph-level (chunk-hash) dedup --------------------------------------
@@ -60,7 +54,7 @@ def dedup_paragraphs(spark, sf_dir):
     at its globally FIRST occurrence (ordered by doc_id, then position);
     each document's text is reassembled from its surviving chunks.
     Output: doc_id, n_chunks, n_kept, dedup_text."""
-    return dedup_paragraphs_df(_docs(spark, sf_dir))
+    return dedup_paragraphs_df(scan.table(spark, sf_dir, "documents", spread=True))
 
 
 def dedup_paragraphs_df(d):
@@ -160,7 +154,7 @@ def boilerplate_strip(spark, sf_dir):
     >= BP_MIN_DF distinct documents of the same source are stripped;
     each document's text is reassembled from surviving chunks.
     Output: doc_id, n_chunks, n_boiler, clean_text."""
-    return boilerplate_strip_df(_docs(spark, sf_dir))
+    return boilerplate_strip_df(scan.table(spark, sf_dir, "documents", spread=True))
 
 
 def boilerplate_strip_df(d):
@@ -247,7 +241,7 @@ PACK_BUCKET = 64   # docs per phase-1 partial-sum bucket
 
 
 def sequence_packing(spark, sf_dir):
-    return sequence_packing_df(_docs(spark, sf_dir))
+    return sequence_packing_df(scan.table(spark, sf_dir, "documents", spread=True))
 
 
 def sequence_packing_df(d, block: int = PACK_BLOCK):
@@ -336,7 +330,7 @@ FROM c
 
 
 def url_canonicalize(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     messy = F.concat(
         F.lit("HTTPS://Host"),
         F.pmod("doc_id", F.lit(7)).cast("string"),
@@ -398,7 +392,7 @@ _POLICY_RULES = [
 
 
 def url_policy_filter(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     host = F.concat(
         F.lit("host"), F.pmod("doc_id", F.lit(5)).cast("string"),
         F.lit(".example.com"),
@@ -519,7 +513,7 @@ PR_DAMP = 0.85
 
 
 def _pr_nodes(spark, sf_dir):
-    d = _docs(spark, sf_dir).select("doc_id")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id")
     n_df = d.agg(F.count("*").alias("n"))
     return (
         d.crossJoin(F.broadcast(n_df))
@@ -740,7 +734,7 @@ def bpe_learn_merges(spark, sf_dir):
     tests/test_curation.py; the contract oracle is the planted
     sentence's merge table with counts scaling by COUNT(documents).
     """
-    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    d = scan.table(spark, sf_dir, "documents", spread=False).select("doc_id")
     words = (
         d.select(F.explode(F.split(F.lit(BPE_SENT), " ")).alias("w"))
         .groupBy("w")
@@ -841,7 +835,7 @@ NFC_SUFFIX = " café naïve français"
 
 
 def nfc_normalize(spark, sf_dir):
-    d = _docs(spark, sf_dir).select(
+    d = scan.table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.concat(F.col("text"), F.lit(NFC_SUFFIX)).alias("raw")
     )
 
@@ -896,7 +890,7 @@ WS_K = 25
 
 def weighted_sample(spark, sf_dir):
     h = _H_SPARK.format(x="cast(doc_id as string)")
-    scored = _docs(spark, sf_dir).selectExpr(
+    scored = scan.table(spark, sf_dir, "documents", spread=True).selectExpr(
         "doc_id",
         "n_chars",
         f"round(-ln((cast({h} % 1000000 as double) + 0.5) / 1000000.0)"
@@ -948,7 +942,7 @@ WARC_FILES = 25
 
 
 def warc_roundtrip(spark, sf_dir):
-    d = _docs(spark, sf_dir).selectExpr(
+    d = scan.table(spark, sf_dir, "documents", spread=True).selectExpr(
         "doc_id",
         f"doc_id % {WARC_FILES} AS file_id",
         "CASE WHEN doc_id % 11 = 0 THEN"
@@ -1032,7 +1026,7 @@ HTTP_VARIANTS = 6
 
 
 def http_envelope_roundtrip(spark, sf_dir):
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
     def kern(batches):
         import hashlib  # noqa: PLC0415
@@ -1131,10 +1125,10 @@ FROM documents
 
 
 def crawl_snapshot_diff(spark, sf_dir):
-    cur = _docs(spark, sf_dir).select(
+    cur = scan.table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.md5(F.col("text")).alias("cur_md5")
     )
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     prev_kept = d.filter(F.pmod("doc_id", F.lit(10)) != 0).select(
         "doc_id",
         F.md5(
@@ -1193,7 +1187,7 @@ FROM cur FULL OUTER JOIN prev ON cur.doc_id = prev.doc_id
 
 
 def compression_ratio(spark, sf_dir):
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
     def kernel(batches):
         import zlib  # noqa: PLC0415
@@ -1242,7 +1236,7 @@ def _curation_golden_sql(name: str) -> str:
 
 
 def host_quality_report(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     per_src = d.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.countDistinct(F.md5("text")).cast("long").alias("n_unique"),
@@ -1362,7 +1356,7 @@ FROM w, z
 
 
 def lang_temperature_sample(spark, sf_dir):
-    return _temperature_mix(_docs(spark, sf_dir).select("lang"))
+    return _temperature_mix(scan.table(spark, sf_dir, "documents", spread=True).select("lang"))
 
 
 def lang_temperature_sample_v2(spark, sf_dir):
@@ -1411,7 +1405,7 @@ LANG_TEMPERATURE_V2_SQL = _lang_temperature_v2_sql()
 
 
 def approx_distinct_accuracy(spark, sf_dir):
-    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     return (
         ev.groupBy("event_type")
         .agg(
@@ -1461,7 +1455,7 @@ POSTING_DF_CAP = 300
 
 
 def inverted_index(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     words = d.select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
     ).where(F.length("term") > 0)
@@ -1532,7 +1526,7 @@ FROM stats LEFT JOIN heads ON stats.term = heads.term
 
 
 def zorder_layout(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     a = f"pmod({_H_SPARK.format(x='source')}, 256)"
     b = "least(n_chars div 16, 255)"
     z = (
@@ -1581,7 +1575,7 @@ FROM z
 
 
 def jsonl_export_roundtrip(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     line = F.to_json(
         F.struct(
             F.col("doc_id"), F.col("lang"), F.col("text")
@@ -1626,7 +1620,7 @@ FROM j
 
 
 def event_funnel(spark, sf_dir):
-    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
+    ev = scan.table(spark, sf_dir, "events", spread=False).select(
         "user_id",
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
@@ -1722,7 +1716,7 @@ CMS_PROBE_TOPK = 20
 def countmin_heavy_hitters(spark, sf_dir):
     from .queries_text import _h64, _toks_spark  # noqa: PLC0415
 
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     toks = d.select(F.explode(F.expr(_toks_spark("text"))).alias("tok"))
     rows = spark.range(CMS_DEPTH).select(F.col("id").cast("int").alias("j"))
     cells = (
@@ -1803,7 +1797,7 @@ CMS_SQL = _cms_sql()
 
 
 def approx_quantile_accuracy(spark, sf_dir):
-    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     return (
         ev.groupBy("event_type")
         .agg(

@@ -29,25 +29,20 @@ from __future__ import annotations
 import os
 
 import numpy as np
-from pyspark.sql import SparkSession, Window as W
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from . import scan
 from .kernels import postprocess
 from .pipeline import extract_pages
-from .scan import read_parquet, spread
 
 PAGE = 1000.0
-
-
-def _events(spark: SparkSession, sf_dir: str):
-    # spread: single-row-group fixture file (see scan.py)
-    return spread(read_parquet(spark, f"{sf_dir}/events.parquet"), key=f"{sf_dir}/events.parquet")
 
 
 def _derived_dets(spark, sf_dir):
     """Deterministic synthetic detections: integer arithmetic on
     event_id only — bit-identical across engines."""
-    ev = _events(spark, sf_dir)
+    ev = scan.table(spark, sf_dir, "events", spread=True)
     e = F.col("event_id")
     return ev.select(
         (F.col("user_id") % 50).alias("doc"),
@@ -230,10 +225,7 @@ def _pages_from_documents(spark, sf_dir, docs=None):
     d = (
         docs
         if docs is not None
-        else spread(
-            read_parquet(spark, f"{sf_dir}/documents.parquet"),
-            key=f"{sf_dir}/documents.parquet",
-        )
+        else scan.table(spark, sf_dir, "documents", spread=True)
     )
     html = F.concat(
         F.lit("<html><head><title>d</title></head><body>"
@@ -430,7 +422,7 @@ def _pdf_pages_from_documents(spark, sf_dir, compress=False, style="Tj", objstm=
     kerned TJ arrays); all variants extract identical text.  When
     ``compress`` is a list, each doc picks the ``doc_id % len`` entry
     (used by the filter-chain twin to cycle codec specs)."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
     def kernel(batches):
         import pandas as pd  # noqa: PLC0415
@@ -481,7 +473,7 @@ def _pdf_extracted(spark, sf_dir, compress=False, style="Tj", objstm=False):
     belongs to the sink path, which keeps the unfused operator)."""
     from .pipeline import OUTPUT_DDL, _extract_batches  # noqa: PLC0415
 
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
     def kern(batches):
         import pyarrow as pa  # noqa: PLC0415
@@ -546,7 +538,7 @@ def extract_pdf_pages_multipage(spark, sf_dir):
     strip.  The parser lays pages out as a continuous scroll, so the
     extracted text equals title + half1 + half2 — the oracle closed
     form splits the text at the same midpoint token boundary."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
     def kernel(batches):
         import pandas as pd  # noqa: PLC0415
@@ -747,7 +739,7 @@ def extract_outlinks_query(spark, sf_dir):
     is stdlib urljoin against the page url; the controlled shapes give
     a closed-form oracle.  Output: one row per (page, position,
     resolved target)."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id")
     html = F.concat(
         F.lit('<html><body><p><a href="https://ext.example.com/p/'),
         F.col("doc_id").cast("string"),
@@ -805,7 +797,7 @@ def robots_policy_filter(spark, sf_dir):
     matched winning rule or NULL)."""
     from .crawl import robots_filter_df, robots_rules_df  # noqa: PLC0415
 
-    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    d = scan.table(spark, sf_dir, "documents", spread=False).select("doc_id")
     h = (F.col("doc_id") % 20).cast("string")
     host = F.concat(F.lit("host"), h, F.lit(".example.com"))
     body_a = (
@@ -891,7 +883,7 @@ def fetch_schedule(spark, sf_dir):
     (url, host, slot, fetch_offset_s)."""
     from .crawl import crawl_delays_df, fetch_schedule_df  # noqa: PLC0415
 
-    d = read_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    d = scan.table(spark, sf_dir, "documents", spread=False).select("doc_id")
     h = (F.col("doc_id") % 20).cast("string")
     host = F.concat(F.lit("host"), h, F.lit(".example.com"))
     body_a = (
@@ -953,7 +945,7 @@ def sitemap_extract(spark, sf_dir):
     closed-form oracle.  Output: one row per sitemap entry."""
     from .crawl import sitemap_entries_df  # noqa: PLC0415
 
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id")
 
     def kern(batches):
         import gzip as _gzip  # noqa: PLC0415
@@ -1033,7 +1025,7 @@ def extract_metadata_query(spark, sf_dir):
     closed-form oracle.  Output: one metadata row per page."""
     from .pipeline import extract_metadata_df  # noqa: PLC0415
 
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id")
     i = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit('<html lang="en-US"><head><title>Doc &amp;\n  '),
@@ -1103,7 +1095,7 @@ def host_pagerank(spark, sf_dir):
     per host, rank rounded to 6 dp."""
     from .pipeline import extract_outlinks_df, pagerank_df  # noqa: PLC0415
 
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id")
     t1 = ((F.col("doc_id") * 3 + 1) % _PR_HOSTS).cast("string")
     t2 = ((F.col("doc_id") + 7) % _PR_HOSTS).cast("string")
     html = F.concat(
@@ -1215,7 +1207,7 @@ def extract_quarantine_stats(spark, sf_dir):
     docs a one-in-a-billion poison would otherwise kill whole
     partitions).  Output: per url, extraction status + reason bucket —
     closed-form oracle on the planting rule."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
     CORRUPT = (
         b"%PDF-1.4\n1 0 obj\n<< /Length 8 /Filter /FlateDecode >>\n"
@@ -1295,7 +1287,7 @@ def corpus_curation_pipeline(spark, sf_dir):
     N_COPY documents appear again under '?ref=copy' urls.  The closed
     form of the controlled page shape makes the whole chain
     SQL-oracle-able."""
-    docs = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    docs = scan.table(spark, sf_dir, "documents", spread=True)
     pages = _pages_from_documents(spark, sf_dir)
     # r6: build the planted copies DIRECTLY from the filtered docs —
     # the old form synthesized the whole corpus a second time and
@@ -1347,7 +1339,7 @@ def label_verify(spark, sf_dir):
     """S9: YOLO label scan + verify (data/utils.py:166-224 semantics):
     derive 5-col normalized labels, keep rows with all coords in [0,1]
     and cls < nc, drop duplicate rows."""
-    ev = _events(spark, sf_dir)
+    ev = scan.table(spark, sf_dir, "events", spread=True)
     e = F.col("event_id")
     labels = ev.select(
         (F.col("user_id") % 50).alias("doc"),
@@ -1465,7 +1457,7 @@ def extract_pages_charsets(spark, sf_dir):
     proving the BOM + meta-prescan sniffer (extract.decode_html)
     recovers the exact unicode text.  Closed-form oracle: the
     controlled page shape extracts to 'Doc <id>\\n\\n<marker>'."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     prefixes, suffixes = _charset_page_parts()
     v = (F.col("doc_id") % _N_CS).cast("int")
 

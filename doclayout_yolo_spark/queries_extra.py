@@ -5,22 +5,17 @@ DuckDB oracle."""
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window as W
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .scan import read_parquet, spread
-
+from . import scan
 from .textfeat import KEYWORD_TABLE
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str):
-    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 # --- CUBE aggregation ---------------------------------------------------------
 
 def cube_order_stats(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = scan.table(spark, sf_dir, "orders", spread=False)
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("n"),
         F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
@@ -37,7 +32,7 @@ FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
 
 
 def rollup_ship_stats(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = scan.table(spark, sf_dir, "lineitem", spread=False)
     return (
         li.select(
             F.year(F.col("l_shipdate")).cast("long").alias("ship_year"),
@@ -65,8 +60,8 @@ FROM lineitem GROUP BY ROLLUP (ship_year, l_returnflag)
 # --- set difference (EXCEPT) ----------------------------------------------------
 
 def customers_minus_eventusers(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("key"))
-    ev = _t(spark, sf_dir, "events").select(F.col("user_id").alias("key"))
+    o = scan.table(spark, sf_dir, "orders", spread=False).select(F.col("o_custkey").alias("key"))
+    ev = scan.table(spark, sf_dir, "events", spread=False).select(F.col("user_id").alias("key"))
     # true set difference: distinct both sides BEFORE subtracting.
     # exceptAll-then-distinct is bag subtraction (a key present in both
     # but with more order rows than event rows would leak through).
@@ -83,7 +78,7 @@ SELECT DISTINCT user_id AS key FROM events
 # --- exact interpolated percentiles ----------------------------------------------
 
 def event_value_percentiles(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     return ev.groupBy("event_type").agg(
         F.round(F.expr("percentile(value, 0.25)"), 6).alias("p25"),
         F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
@@ -103,7 +98,7 @@ FROM events GROUP BY event_type
 # --- as-of join rendering: last 'click' before each 'purchase' per user ----------
 
 def asof_click_before_purchase(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").select(
+    ev = scan.table(spark, sf_dir, "events", spread=False).select(
         "user_id",
         "event_id",
         "event_type",
@@ -146,7 +141,7 @@ SELECT user_id, purchase_id, click_id, gap_us FROM joined WHERE rn = 1
 # --- C9: keyword-class scores over documents --------------------------------------
 
 def keyword_class_scores(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = scan.table(spark, sf_dir, "documents", spread=False)
     cols = [F.col("doc_id")]
     for name, kws in KEYWORD_TABLE.items():
         hits = None
@@ -275,7 +270,7 @@ GRID_N = 19  # thresholds 5..95 step 5
 
 def _f1_grid(spark, sf_dir):
     """Per-(event_type, threshold) F1 curve over a broadcast grid."""
-    ev = _t(spark, sf_dir, "events")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     grid = spark.range(1, GRID_N + 1).select((F.col("id") * 5.0).alias("thr"))
     per_type = ev.groupBy("event_type").agg(
         F.count("*").alias("n_total"), F.max("value").alias("vmax")
@@ -468,7 +463,7 @@ LETTERBOX_SQL = _letterbox_sql()
 def clean_str_sample(spark, sf_dir):
     """Special-chars -> '_' regex cleanup (utils/ops.py:839-849 analog)
     over document source labels."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan.table(spark, sf_dir, "documents", spread=False)
     return d.select(
         "doc_id",
         F.regexp_replace(
@@ -500,13 +495,13 @@ def salted_skew_join(spark, sf_dir):
     (the oracle is the plain join), which is exactly the point: same
     answer, bounded per-task input at any skew.  AQE skew-split is the
     runtime backstop; salting is the planned treatment."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = scan.table(spark, sf_dir, "events", spread=False).select(
         "user_id",
         "event_id",
         "value",
         F.pmod(F.xxhash64("event_id"), F.lit(N_JOIN_SALTS)).alias("salt"),
     )
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = scan.table(spark, sf_dir, "customer", spread=False).select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     salts = spark.range(N_JOIN_SALTS).select(F.col("id").alias("salt"))
@@ -555,7 +550,7 @@ def range_join_clicks_in_window(spark, sf_dir):
     loop over broadcast ranges — the plan that works when the probe
     side is 10^12 rows (never a cross shuffle).  Output one row per
     window with click count + distinct clickers."""
-    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
+    ev = scan.table(spark, sf_dir, "events", spread=False).select(
         "user_id",
         "event_id",
         "event_type",
@@ -613,7 +608,7 @@ FROM w LEFT JOIN hits ON w.window_id = hits.window_id
 
 
 def url_host_stats(spark, sf_dir):
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     url = F.expr(_URL_EXPR.format(str_t="STRING"))
     host = F.lower(F.regexp_extract(url, r"https?://([^/:?]+)", 1))
     path = F.regexp_extract(url, r"https?://[^/?]+(/[^?]*)", 1)
@@ -648,7 +643,7 @@ def event_props_json(spark, sf_dir):
     """JSON property extraction (the semi-structured leg every event
     pipeline has): pull props.k out of the JSON string column and
     aggregate per event type.  JVM-side get_json_object — no UDF."""
-    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         ev.select("event_type", k.alias("k"))

@@ -13,14 +13,10 @@ Numeric-parity conventions (Spark vs DuckDB must hash-match):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .scan import read_parquet
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+from . import scan
 
 
 def _dec(c):
@@ -50,7 +46,7 @@ def _money(price, *factors):
 # --- A1/A8 analog: grouped aggregation (pricing summary) -------------------
 
 def q1_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = scan.table(spark, sf_dir, "lineitem", spread=False)
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1999-09-01"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -93,9 +89,15 @@ GROUP BY l_returnflag, l_linestatus
 # --- join + group + deterministic top-k (shipping priority) ----------------
 
 def q3_top_orders(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1998-01-01"))
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1998-01-01"))
+    cust = scan.table(spark, sf_dir, "customer", spread=False).filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    orders = scan.table(spark, sf_dir, "orders", spread=False).filter(
+        F.col("o_orderdate") < F.lit("1998-01-01")
+    )
+    li = scan.table(spark, sf_dir, "lineitem", spread=False).filter(
+        F.col("l_shipdate") > F.lit("1998-01-01")
+    )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -128,15 +130,15 @@ LIMIT 10
 # --- multi-way join with broadcast dims (local supplier volume) ------------
 
 def q5_region_revenue(spark, sf_dir):
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").filter(
+    region = scan.table(spark, sf_dir, "region", spread=False).filter(F.col("r_name") == "ASIA")
+    nation = scan.table(spark, sf_dir, "nation", spread=False)
+    cust = scan.table(spark, sf_dir, "customer", spread=False)
+    supp = scan.table(spark, sf_dir, "supplier", spread=False)
+    orders = scan.table(spark, sf_dir, "orders", spread=False).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1998-01-01"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = scan.table(spark, sf_dir, "lineitem", spread=False)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -173,7 +175,7 @@ GROUP BY n_name
 # --- F1-style predicate + single aggregate (revenue forecast) --------------
 
 def q6_forecast(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = scan.table(spark, sf_dir, "lineitem", spread=False)
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01"))
@@ -203,8 +205,8 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-0
 # --- J3 analog: broadcast dimension lookup join ----------------------------
 
 def brand_volume(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = scan.table(spark, sf_dir, "lineitem", spread=False)
+    part = scan.table(spark, sf_dir, "part", spread=False)
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
@@ -226,7 +228,7 @@ GROUP BY p_brand
 # --- §2.8 per-group top-k: row_number window --------------------------------
 
 def top3_events_per_user(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     w = W.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
     return (
         ev.withColumn("rn", F.row_number().over(w).cast("long"))
@@ -250,7 +252,7 @@ SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
 def sessionize_events(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").select(
+    ev = scan.table(spark, sf_dir, "events", spread=False).select(
         "user_id",
         "event_id",
         # parquet ts is TIMESTAMP_NTZ; session tz is UTC so this cast is
@@ -287,7 +289,7 @@ FROM flagged GROUP BY user_id
 # --- A5 analog: precision envelope = reverse running max --------------------
 
 def precision_envelope(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     w = (
         W.partitionBy("event_type")
         .orderBy("ts", "event_id")
@@ -311,7 +313,7 @@ FROM events
 # --- A3 analog: cumulative sum after ordering --------------------------------
 
 def running_value_cumsum(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     w = (
         W.partitionBy("event_type")
         .orderBy(F.desc("value"), F.asc("event_id"))
@@ -335,7 +337,7 @@ FROM events
 # --- A9 analog: confusion-matrix style two-key counts ------------------------
 
 def event_value_confusion(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     bucket = F.least(F.floor(F.col("value") / 25.0), F.lit(3)).cast("long")
     return (
         ev.select("event_type", bucket.alias("value_bucket"))
@@ -355,7 +357,7 @@ FROM events GROUP BY 1, 2
 # --- time-bucketed rollup (hourly) -------------------------------------------
 
 def hourly_rollup(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ev = scan.table(spark, sf_dir, "events", spread=False)
     return (
         ev.groupBy(
             F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("hour_us"),
@@ -379,10 +381,10 @@ FROM events GROUP BY 1, 2
 # --- set ops: distinct union (U1/U3 analog) ----------------------------------
 
 def active_keys_union(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = scan.table(spark, sf_dir, "orders", spread=False).select(
         F.col("o_custkey").alias("key"), F.lit("order").alias("side")
     )
-    ev = _t(spark, sf_dir, "events").select(
+    ev = scan.table(spark, sf_dir, "events", spread=False).select(
         F.col("user_id").alias("key"), F.lit("event").alias("side")
     )
     return orders.unionByName(ev).distinct()
@@ -398,8 +400,8 @@ SELECT DISTINCT user_id AS key, 'event' AS side FROM events
 # --- anti join (resume-semantics rendering, SURVEY §2.3) ---------------------
 
 def customers_without_orders(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = scan.table(spark, sf_dir, "customer", spread=False)
+    orders = scan.table(spark, sf_dir, "orders", spread=False)
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .select("c_custkey", "c_name")
@@ -419,7 +421,7 @@ def small_quantity_revenue(spark, sf_dir):
     quantity is below 20% of the per-part average (the correlated
     scalar-subquery pattern, rendered as a join with a per-part
     aggregate — what Catalyst decorrelation produces)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = scan.table(spark, sf_dir, "lineitem", spread=False)
     per_part = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.avg("l_quantity").alias("avg_qty")
     )
@@ -447,10 +449,10 @@ WHERE l_quantity < (
 # --- returned-item revenue (TPC-H q10 shape: fact->dims with top-k) -----------
 
 def returned_item_revenue(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li = scan.table(spark, sf_dir, "lineitem", spread=False).filter(F.col("l_returnflag") == "R")
+    orders = scan.table(spark, sf_dir, "orders", spread=False)
+    cust = scan.table(spark, sf_dir, "customer", spread=False)
+    nation = scan.table(spark, sf_dir, "nation", spread=False)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -483,8 +485,8 @@ LIMIT 20
 # --- disjunctive multi-branch predicate (TPC-H q19 shape) ----------------------
 
 def disjunctive_revenue(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = scan.table(spark, sf_dir, "lineitem", spread=False)
+    part = scan.table(spark, sf_dir, "part", spread=False)
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     branch1 = (
         (F.col("p_brand") == "Brand#1")
@@ -524,7 +526,7 @@ def sql_api_region_revenue(spark, sf_dir):
     the ANSI-portable subset: one string, two engines, identical value
     hashes."""
     for t in ("region", "nation", "customer", "supplier", "orders", "lineitem"):
-        read_parquet(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+        scan.table(spark, sf_dir, t, spread=False).createOrReplaceTempView(t)
     return spark.sql(Q5_SQL)
 
 
@@ -537,8 +539,8 @@ def priority_late_orders(spark, sf_dir):
     rendered as a left-semi join (what Catalyst rewrites EXISTS to).
     Scale: semi join keyed by orderkey (no row multiplication from
     multi-line orders), then a tiny priority aggregation."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = scan.table(spark, sf_dir, "orders", spread=False)
+    li = scan.table(spark, sf_dir, "lineitem", spread=False)
     late = li.select("l_orderkey", "l_shipdate")
     return (
         o.join(
@@ -570,8 +572,8 @@ def promo_revenue_share(spark, sf_dir):
     """Share of revenue from PROMO parts — the conditional-aggregation
     ratio.  Broadcast the part dim; money math follows the decimal
     conventions so both engines agree bitwise."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = scan.table(spark, sf_dir, "lineitem", spread=False)
+    p = scan.table(spark, sf_dir, "part", spread=False)
     rev = _money(F.col("l_extendedprice"), 1.0 - F.col("l_discount"))
     j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
     return j.agg(
@@ -613,8 +615,8 @@ def dormant_rich_customers(spark, sf_dir):
     scalar-subquery shape.  The 1-row average enters via a broadcast
     cross join; the anti join is keyed by custkey with the date filter
     pushed to the orders scan."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = scan.table(spark, sf_dir, "customer", spread=False)
+    o = scan.table(spark, sf_dir, "orders", spread=False).filter(
         F.col("o_orderdate") >= "2000-06-01"
     )
     avg_bal = (

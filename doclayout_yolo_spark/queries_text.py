@@ -11,16 +11,11 @@ identical everywhere; 15 hex chars fit in int64.  Spark:
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window as W
+from pyspark import StorageLevel
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .scan import read_parquet, spread
-
-
-def _docs(spark: SparkSession, sf_dir: str):
-    # spread: the single-row-group fixture file would otherwise put the
-    # whole tokenize/hash/regex map stage on one core (scan.py)
-    return spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+from . import memo, scan
 
 
 def _h64(col):
@@ -88,7 +83,7 @@ _TOKS_DUCK_TEXT = _toks_duck("text")
 # --- C8 analog: per-document text statistics --------------------------------
 
 def text_stats(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     length = F.length("text")
     return d.select(
         "doc_id",
@@ -124,7 +119,7 @@ FROM documents
 # --- token counting (BPE-ish regex + distinct words) -------------------------
 
 def token_count(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     return d.select(
         "doc_id",
         F.regexp_count(F.col("text"), F.lit("[a-z0-9]+")).cast("long").alias("n_tokens"),
@@ -150,7 +145,7 @@ _BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
 def token_count_bpe(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     toks = F.regexp_extract_all(F.col("text"), F.lit(f"({_BPE_RE})"), 1)
     n = F.size(toks).cast("long")
     return d.select(
@@ -192,7 +187,7 @@ def _occ_spark(word: str):
 
 
 def lang_id(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     scores = {
         lang: sum((_occ_spark(w) for w in ws[1:]), _occ_spark(ws[0]))
         for lang, ws in _MARKERS.items()
@@ -242,7 +237,7 @@ FROM s
 # --- quality scoring ----------------------------------------------------------
 
 def quality_score(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     n_words = F.size(F.split(F.col("text"), " ")).cast("double")
     stop_hits = sum(
         (_occ_spark(w) for w in ("and", "of", "to")), _occ_spark("the")
@@ -279,7 +274,7 @@ FROM s
 # --- exact dedup: hash-groupBy fingerprinting ----------------------------------
 
 def dedup_exact(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     return (
         d.select("doc_id", F.md5(F.col("text")).alias("fingerprint"))
         .groupBy("fingerprint")
@@ -308,9 +303,6 @@ JACCARD_THRESHOLD = 0.6
 MAX_SHINGLE_DF = 50
 
 
-_SHINGLE_CACHE: dict = {}
-
-
 def _shingles(spark, sf_dir):
     """Distinct (doc_id, 3-gram) rows, PERSISTED: every dedup query
     reuses this subtree several times (df cap, per-doc counts, both
@@ -326,25 +318,15 @@ def _shingles(spark, sf_dir):
     query-builder invocations across a long-lived session (contract
     sweeps, bench loops) reuse ONE persisted DataFrame instead of
     stacking cache entries — and a rewritten fixture under the same
-    path invalidates the memo instead of serving stale data (r3
-    ADVICE; policy lives in memo.memo_lookup)."""
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
-
-    key, cached = memo_lookup(
-        _SHINGLE_CACHE,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_mtime(f"{sf_dir}/documents.parquet"),
+    path invalidates the memo instead of serving stale data (memo.py)."""
+    return memo.cached(
+        spark,
+        ("shingles", sf_dir),
+        f"{sf_dir}/documents.parquet",
+        lambda: _shingles_from(
+            scan.table(spark, sf_dir, "documents", spread=True)
+        ).persist(StorageLevel.MEMORY_AND_DISK),
     )
-    if cached is not None:
-        return cached
-    from pyspark import StorageLevel  # noqa: PLC0415
-
-    built = _shingles_from(_docs(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _SHINGLE_CACHE[key] = built
-    return built
 
 
 def _shingles_from(docs_df):
@@ -387,9 +369,6 @@ def _capped_from(sh):
     return sh.join(F.broadcast(hot), "sh", "left_anti")
 
 
-_CAPPED_CACHE: dict = {}
-
-
 def _capped_shingles(spark, sf_dir):
     """df-capped shingles, PERSISTED + memoized exactly like
     ``_shingles`` (r6): the cap anti-join re-executed once per
@@ -398,23 +377,14 @@ def _capped_shingles(spark, sf_dir):
     materialization saves N-1 passes over the corpus shingle table.
     Same 100-TB story as the parent cache: stage the filtered shingle
     table once, spill instead of recompute."""
-    from pyspark import StorageLevel  # noqa: PLC0415
-
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
-
-    key, cached = memo_lookup(
-        _CAPPED_CACHE,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_mtime(f"{sf_dir}/documents.parquet"),
+    return memo.cached(
+        spark,
+        ("capped_shingles", sf_dir),
+        f"{sf_dir}/documents.parquet",
+        lambda: _capped_from(_shingles(spark, sf_dir)).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
     )
-    if cached is not None:
-        return cached
-    built = _capped_from(_shingles(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _CAPPED_CACHE[key] = built
-    return built
 
 
 def dedup_ngram_jaccard(spark, sf_dir):
@@ -702,7 +672,7 @@ def decontaminate_against_eval(spark, sf_dir):
         .agg(F.count("*").cast("long").alias("n_shared_shingles"))
     )
     all_train = (
-        _docs(spark, sf_dir)
+        scan.table(spark, sf_dir, "documents", spread=True)
         .filter(F.col("doc_id") >= N_EVAL_DOCS)
         .select("doc_id")
     )
@@ -750,7 +720,7 @@ _PHONE_RE = "[0-9]{3}-[0-9]{4}"
 
 
 def redact_pii(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     dirty = F.expr(_PII_TEXT.format(str_t="STRING"))
     clean = F.regexp_replace(
         F.regexp_replace(dirty, _EMAIL_RE, "[EMAIL]"), _PHONE_RE, "[PHONE]"
@@ -784,7 +754,7 @@ def dup_sentence_fraction(spark, sf_dir):
     (the fixture text is single-line): fraction of sentences that are
     repeats of an earlier sentence in the same document.  A high value
     flags template/boilerplate pages that survive exact dedup."""
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     sents = (
         "filter(transform(split(text, '[.]'), s -> trim(s)),"
         " s -> char_length(s) > 0)"
@@ -864,7 +834,7 @@ def _packed_sums(hashed, bits: int, bit_sql):
 
 
 def _simhash_df(spark, sf_dir, bits: int):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     words = d.select(
         "doc_id",
         F.explode(F.array_distinct(F.expr(_toks_spark("text")))).alias("word"),
@@ -943,7 +913,7 @@ def tfidf_top_terms(spark, sf_dir):
     instead of funneling into one.  Replication cost is
     vocabulary-sized (<< corpus-sized tf).  Output is identical to the
     unsalted join — the oracle is unchanged."""
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     # corpus size as a broadcast 1-row aggregate (keeps the query lazy —
     # no driver-side action inside the builder)
     n = d.agg(F.count("*").cast("double").alias("n_docs"))
@@ -999,7 +969,7 @@ def repetition_ratio(spark, sf_dir):
     """Fraction of the document taken by its most frequent term — the
     repetition quality signal large-corpus filters use (a page that is
     30% one token is boilerplate).  One groupBy + argmax window."""
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     words = d.select(
         "doc_id", F.explode(F.expr(_toks_spark("text"))).alias("term")
     )
@@ -1147,7 +1117,7 @@ def corpus_curation_v2(spark, sf_dir):
     100 TB job actually runs them, and the funnel counts come out in
     the survivor rows.  Output: one row per surviving training doc
     with its word count and redacted-text fingerprint."""
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     keep = (
         d.select("doc_id", F.md5("text").alias("fp"))
         .groupBy("fp")
@@ -1251,7 +1221,7 @@ def _h64b(col):
 
 
 def _simhash64_df(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     words = d.select(
         "doc_id",
         F.explode(F.array_distinct(F.expr(_toks_spark("text")))).alias("word"),
@@ -1757,7 +1727,7 @@ def doc_rolling_fingerprint(spark, sf_dir):
     Catalyst ``aggregate`` fold per row (no shuffle at all; the 100 TB
     cost is one pass over text).  Both engines seed the fold with the
     first token's code (DuckDB's list_reduce has no explicit init)."""
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     codes = (
         "transform(split(text, ' '), t ->"
         f" cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint) % {TOKEN_MOD})"
@@ -1805,7 +1775,7 @@ def stratified_sample(spark, sf_dir):
     that's a straggler at 100 TB; the global top-k is a subset of the
     union of per-partition top-k's, so the output is unchanged (same
     oracle)."""
-    ev = read_parquet(spark, f"{sf_dir}/events.parquet").select(
+    ev = scan.table(spark, sf_dir, "events", spread=False).select(
         "event_type",
         "event_id",
         "value",
@@ -1853,9 +1823,6 @@ SELECT event_type, event_id, value, sample_rank FROM (
 MAX_CC_ITERS = 20
 
 
-_CLUSTER_CACHE: dict = {}
-
-
 def dedup_clusters(spark, sf_dir):
     """Group near-duplicate documents into clusters: connected
     components over the Jaccard>=threshold pair graph via iterative
@@ -1865,25 +1832,17 @@ def dedup_clusters(spark, sf_dir):
     from the LSH-candidate-restricted exact Jaccard (the scale path:
     the all-pairs equi-join never runs), mirrored in the oracle.
     Output: (doc_id, cluster_id = min doc_id of the component)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
-
     # memoized per (app, sf_dir, mtime): the iterative propagation runs
     # driver-side ACTIONS at build time, so every builder call would
     # otherwise re-run the whole loop AND leak one cached labels DF
-    key, cached = memo_lookup(
-        _CLUSTER_CACHE,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_mtime(f"{sf_dir}/documents.parquet"),
+    labels = memo.cached(
+        spark,
+        ("cluster_labels", sf_dir),
+        f"{sf_dir}/documents.parquet",
+        lambda: _cluster_labels_from(
+            dedup_jaccard_lsh(spark, sf_dir).select("doc_a", "doc_b")
+        ),
     )
-    if cached is not None:
-        return cached.select("doc_id", "cluster_id")
-    labels = _cluster_labels_from(
-        dedup_jaccard_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    )
-    _CLUSTER_CACHE[key] = labels
     return labels.select("doc_id", "cluster_id")
 
 
@@ -1977,9 +1936,7 @@ def neardup_collapse_df(docs_df, with_stats: bool = False):
     collapsed docs, band rows dropped by BUCKET_CAP (docs a fired cap
     silently RETAINS — they join no candidate pair), and the largest
     bucket seen."""
-    from pyspark import StorageLevel  # noqa: PLC0415
-
-    sh = _shingles_from(docs_df.select("doc_id", "text")).persist(
+    sh =_shingles_from(docs_df.select("doc_id", "text")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     try:
@@ -2070,7 +2027,7 @@ def corpus_curation_v3(spark, sf_dir):
 
     from .pipeline import extract_pages  # noqa: PLC0415
 
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     html = F.concat(
         F.lit(
             '<html><head><title>d</title></head><body>'
@@ -2194,7 +2151,7 @@ def tokenize_mixed_script(spark, sf_dir):
     per (doc, token) counts with a CJK flag — the value-hash gate
     proves the Spark and DuckDB tokenizers agree token-for-token on
     Han/kana/Hangul input."""
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     toks = d.selectExpr(
         "doc_id", f"explode({_toks_spark(_MIXED_EXPR)}) AS tok"
     )
@@ -2221,7 +2178,7 @@ def lang_id_cjk(spark, sf_dir):
     outranks Han on ties (Japanese text necessarily contains kanji,
     Chinese contains no kana), Latin languages are the fallback when
     no CJK is present."""
-    d = _docs(spark, sf_dir).selectExpr(
+    d = scan.table(spark, sf_dir, "documents", spread=True).selectExpr(
         "doc_id", "lang", f"{_MIXED_EXPR} AS text"
     )
     n_han = F.length(F.regexp_replace(F.col("text"), f"[^{_HAN[1:-1]}]", ""))
@@ -2291,7 +2248,7 @@ FROM s
 
 
 def unigram_surprisal(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     toks = d.select(
         "doc_id", F.explode(F.expr(_toks_spark("text"))).alias("tok")
     )
@@ -2365,48 +2322,38 @@ FROM scored
 
 SUBSTR_W = 8
 
-_GRAM_CACHE: dict = {}
-
-
 def _substr_grams(spark, sf_dir):
     """(doc_id, p, g) W-gram rows, PERSISTED + memoized like _shingles:
     the gram explode (xW amplification over the corpus) is the dominant
     cost and has TWO consumers (the dup-gram count and the coverage
     join) — without the cache it would execute twice per query."""
-    from pyspark import StorageLevel  # noqa: PLC0415
 
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
+    def build():
+        d = scan.table(spark, sf_dir, "documents", spread=True)
+        toks = d.select("doc_id", F.expr(_toks_spark("text")).alias("w"))
+        # docs shorter than W tokens emit NO grams: Spark's
+        # sequence(0, -1) is DESCENDING (never empty), so the short-doc
+        # case needs an explicit branch — caught by the randomized-
+        # corpus gate
+        return toks.select(
+            "doc_id",
+            F.posexplode(
+                F.expr(
+                    f"CASE WHEN size(w) >= {SUBSTR_W} THEN"
+                    f" transform(sequence(0, size(w) - {SUBSTR_W}),"
+                    f" i -> md5(concat_ws(' ', slice(w, i + 1, {SUBSTR_W}))))"
+                    f" ELSE cast(array() as array<string>) END"
+                )
+            ).alias("p", "g"),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    key, cached = memo_lookup(
-        _GRAM_CACHE,
-        spark.sparkContext.applicationId,
-        sf_dir,
-        source_mtime(f"{sf_dir}/documents.parquet"),
+    return memo.cached(
+        spark, ("substr_grams", sf_dir), f"{sf_dir}/documents.parquet", build
     )
-    if cached is not None:
-        return cached
-    d = _docs(spark, sf_dir)
-    toks = d.select("doc_id", F.expr(_toks_spark("text")).alias("w"))
-    # docs shorter than W tokens emit NO grams: Spark's sequence(0, -1)
-    # is DESCENDING (never empty), so the short-doc case needs an
-    # explicit branch — caught by the randomized-corpus gate
-    built = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"CASE WHEN size(w) >= {SUBSTR_W} THEN"
-                f" transform(sequence(0, size(w) - {SUBSTR_W}),"
-                f" i -> md5(concat_ws(' ', slice(w, i + 1, {SUBSTR_W}))))"
-                f" ELSE cast(array() as array<string>) END"
-            )
-        ).alias("p", "g"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _GRAM_CACHE[key] = built
-    return built
 
 
 def exact_substring_dup_fraction(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", F.expr(_toks_spark("text")).alias("w"))
     grams = _substr_grams(spark, sf_dir)
     dup_g = grams.groupBy("g").agg(F.count("*").alias("n")).filter(F.col("n") > 1)
@@ -2472,7 +2419,7 @@ _LOGREG_B = -1.0
 
 
 def quality_logreg_score(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     n_words = F.size(F.split(F.col("text"), " ")).cast("double")
     stop_hits = sum(
         (_occ_spark(w) for w in ("and", "of", "to")), _occ_spark("the")
@@ -2535,7 +2482,7 @@ CHUNK_STRIDE = 48
 
 
 def chunk_passages(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     toks = d.select("doc_id", F.split(F.col("text"), " ").alias("w"))
     starts = (
         f"CASE WHEN size(w) <= {CHUNK_SIZE} THEN array(0)"
@@ -2602,7 +2549,7 @@ DOMAIN_TOKEN_BUDGET = 800
 
 
 def domain_token_budget(spark, sf_dir):
-    d = _docs(spark, sf_dir)
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     n_tok = F.size(F.split(F.col("text"), " ")).cast("long")
     w = W.partitionBy("source").orderBy("doc_id")
     scored = d.select("doc_id", "source", n_tok.alias("n_tokens")).withColumn(
@@ -2672,7 +2619,9 @@ def lang_id_v2(spark, sf_dir):
     argmax (en/de/fr/es/pt) as the fallback — script evidence always
     outranks marker evidence, mirroring how fastText-style IDs treat
     unambiguous scripts."""
-    d = _docs(spark, sf_dir).selectExpr("doc_id", f"{_MIXED8_EXPR} AS text")
+    d = scan.table(spark, sf_dir, "documents", spread=True).selectExpr(
+        "doc_id", f"{_MIXED8_EXPR} AS text"
+    )
 
     def n_of(cls):
         return F.length(F.regexp_replace(F.col("text"), f"[^{cls[1:-1]}]", ""))

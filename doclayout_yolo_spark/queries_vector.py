@@ -14,25 +14,22 @@ import numpy as np
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .scan import read_parquet, spread
+from . import memo, scan
 from .session import local_df
 
 TOPK = 3
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 
 
-def _emb(spark: SparkSession, sf_dir: str, wide: bool = True):
-    """``wide=True`` spreads the single-row-group scan (scan.py) — a
+def _emb(spark: SparkSession, sf_dir: str, spread: bool = True):
+    """``spread=True`` spreads the single-row-group scan (scan.py) — a
     measured win for the matmul-kernel consumers (ann_cosine_topk
     0.57 vs 1.32 s, ann_ivf 1.37 vs 1.92 s steady at sf1.0).  The
-    planted-pair LSH path passes ``wide=False``: its per-row work is
+    planted-pair LSH path passes ``spread=False``: its per-row work is
     light and the extra exchange measured a net LOSS at both scales
     (ann_lsh_multiband 0.92 vs 1.51 s at sf0.1, 3.14 vs 3.41 at
     sf1.0)."""
-    df = read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    if wide:
-        df = spread(df, key=f"{sf_dir}/embeddings.parquet")
-    return df.select(
+    return scan.table(spark, sf_dir, "embeddings", spread=spread).select(
         "vec_id",
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
@@ -169,7 +166,7 @@ def multimodal_feature_extract(spark, sf_dir):
     shape of any decode->featurize stage (image color histograms,
     audio energy bands), computed in one Arrow-batched pass.  Output:
     doc_id, 16 bin counts, and the dominant nibble."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select(
+    d = scan.table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
     )
 
@@ -222,7 +219,7 @@ FROM f
 
 
 def multimodal_decode_stub(spark, sf_dir):
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet").select(
+    d = scan.table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
     )
     return d.mapInPandas(_decode_kernel, schema=DECODE_DDL)
@@ -259,7 +256,7 @@ def _ascii_payload(spark, sf_dir):
     ANY input text — without it, one multi-byte character silently
     desyncs chunk boundaries between the engines (DuckDB v1.0 has no
     BLOB substring/md5 to express the byte view directly)."""
-    d = spread(read_parquet(spark, f"{sf_dir}/documents.parquet"), key=f"{sf_dir}/documents.parquet")
+    d = scan.table(spark, sf_dir, "documents", spread=True)
     return d.select(
         "doc_id",
         F.encode(
@@ -543,9 +540,9 @@ _JITTER_SPARK = (
 
 
 def _planted_emb(spark, sf_dir):
-    # wide=False: see _emb — the planted-LSH consumers measured a net
+    # spread=False: see _emb — the planted-LSH consumers measured a net
     # loss from the scan-spread exchange at both scales
-    emb = _emb(spark, sf_dir, wide=False).select("vec_id", "vec")
+    emb = _emb(spark, sf_dir, spread=False).select("vec_id", "vec")
     planted = emb.filter(F.col("vec_id") < PLANT_N).select(
         (F.col("vec_id") + PLANT_OFFSET).alias("vec_id"),
         F.expr(_JITTER_SPARK).alias("vec"),
@@ -686,27 +683,17 @@ FROM truth LEFT JOIN cand ON truth.vec_a = cand.vec_a AND truth.vec_b = cand.vec
 K_CELLS = 16
 
 
-_HEAD_VEC_CACHE: dict = {}
-
-
 def _head_vectors(spark, sf_dir, k: int) -> np.ndarray:
     """First-k vectors as a (k, DIM) float64 matrix — the collected
     codebook the IVF/PQ kernels close over.  Memoized per
     (application, sf_dir, k): the collect is a dimension-sized driver
     artifact (a trained codebook ships to executors the same way), but
     building a query should not re-scan embeddings on every builder
-    invocation (plan audits, bench warmups, repeated contract runs)."""
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
+    invocation (plan audits, bench warmups, repeated contract runs).
+    mtime in the key: a rewritten fixture under the same path must not
+    serve a stale codebook (memo.py)."""
 
-    # mtime in the key: a rewritten fixture under the same path must
-    # not serve a stale codebook (r3 ADVICE; policy in memo.memo_lookup)
-    key, got = memo_lookup(
-        _HEAD_VEC_CACHE,
-        spark.sparkContext.applicationId,
-        (sf_dir, k),
-        source_mtime(f"{sf_dir}/embeddings.parquet"),
-    )
-    if got is None:
+    def build():
         rows = sorted(
             _emb(spark, sf_dir)
             .select("vec_id", "vec")
@@ -714,9 +701,11 @@ def _head_vectors(spark, sf_dir, k: int) -> np.ndarray:
             .collect(),
             key=lambda r: r["vec_id"],
         )
-        got = np.array([r["vec"] for r in rows], dtype=np.float64)
-        _HEAD_VEC_CACHE[key] = got
-    return got
+        return np.array([r["vec"] for r in rows], dtype=np.float64)
+
+    return memo.cached(
+        spark, ("head_vectors", sf_dir, k), f"{sf_dir}/embeddings.parquet", build
+    )
 
 
 def _ivf_assigned(spark, sf_dir):

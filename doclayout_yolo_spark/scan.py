@@ -1,24 +1,35 @@
-"""Scan-parallelism floor for compute-heavy first stages.
+"""The scan layer: every query reads a fixture table through
+``table(spark, sf_dir, name, *, spread)``.
 
-The bench's parquet inputs are single-file, single-ROW-GROUP tables
+Reader memo.  ``spark.read.parquet`` costs ~100 ms of DRIVER time per
+call (footer read + schema inference), and the bench protocol rebuilds
+every query once per timed run — a 6-table query paid ~0.6 s of pure
+metadata work per run.  ``table`` memoizes the READER frame per
+session under ``("reader", path)`` (memo.py: keyed on the file's
+mtime, evicted when the file is rewritten or the application ends).
+No rows are materialized or cached; every execution re-scans the
+parquet data — the moral equivalent of registering temp views once.
+
+Spread.  The fixtures are single-file, single-ROW-GROUP tables
 (documents.parquet at sf1.0 is 5.9 MB / 1 row group), so a plain read
 yields ONE scan partition no matter what ``maxPartitionBytes`` /
 ``minPartitionNum`` say — parquet splits land on row-group boundaries.
 Every query whose expensive work happens BEFORE its first exchange
 (tokenize + md5 signature aggregation, per-doc regex scoring, PDF /
-HTML fixture synthesis inside mapInPandas, embedding matmuls) then
-runs that work on one core of the 32 available.
-
-``spread`` is the optimization-guide §2.5 remedy ("input skew: one
-huge unsplittable file — repartition immediately after the read"),
-made scale-adaptive instead of constant-tuned: it repartitions to
-``defaultParallelism`` ONLY when the scan's own partition count is
-below it.  At production scale inputs are many splittable files and
-the scan already exceeds cluster parallelism, so this is a no-op —
-no extra exchange is ever added to a 100 TB read.  Locally the added
-exchange moves a few MB of pruned columns (Catalyst pushes projects
-below Repartition, so column pruning still reaches the scan) and buys
-a cores-wide first stage.
+HTML fixture synthesis inside mapInPandas, embedding matmuls) would
+then run that work on one core.  ``spread=True`` is the
+optimization-guide §2.5 remedy ("one huge unsplittable file —
+repartition immediately after the read"), made scale-adaptive: it
+repartitions to ``defaultParallelism`` ONLY when the scan's own
+partition count is below it.  At production scale inputs are many
+splittable files and the scan already exceeds cluster parallelism, so
+no exchange is ever added to a 100 TB read.  Locally the exchange moves
+a few MB of pruned columns (Catalyst pushes projects below Repartition)
+and buys a cores-wide first stage.  The partition-count probe costs
+~40 ms of driver time (plan -> RDD conversion), so the spread frame is
+memoized too, under ``("spread", path)``.  ``spread`` is keyword-only:
+every call site states its policy (a light per-row stage can measure
+a net loss from the extra exchange).
 
 Row values are untouched and every query downstream is
 partition-independent (no rand / monotonically_increasing_id /
@@ -28,72 +39,28 @@ byte-identical with and without the repartition.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-#: (applicationId, key, source mtime) -> bool decision memo: the
-#: partition-count probe costs ~40 ms of driver time (plan -> RDD
-#: conversion), and the bench protocol rebuilds every query per timed
-#: run — without the memo that probe lands inside the timed region on
-#: every run.  mtime keying mirrors memo.py: a rewritten fixture under
-#: the same path invalidates the cached decision.
-_DECISION: dict = {}
+from . import memo
 
 
-#: (applicationId, ("reader", path), mtime) -> reader DataFrame.
-#: ``spark.read.parquet`` costs ~100 ms of DRIVER time per call
-#: (footer read + schema inference), and the bench protocol rebuilds
-#: every query once per timed run — a 6-table query paid ~0.6 s of
-#: pure metadata work per run.  This memoizes the READER frame only:
-#: no rows are materialized or cached, every execution re-scans the
-#: parquet data; it is the moral equivalent of registering temp views
-#: once per session.  Eviction policy shared with memo.py (stale
-#: mtime or dead app -> dropped).
-_READER_CACHE: dict = {}
-
-
-def read_parquet(spark, path: str) -> DataFrame:
-    """Session-memoized ``spark.read.parquet(path)`` (see above)."""
-    from .memo import memo_lookup, source_mtime  # noqa: PLC0415
-
-    key, cached = memo_lookup(
-        _READER_CACHE,
-        spark.sparkContext.applicationId,
-        ("reader", path),
-        source_mtime(path),
+def table(spark, sf_dir: str, name: str, *, spread: bool) -> DataFrame:
+    """Session-memoized ``{sf_dir}/{name}.parquet`` reader frame,
+    repartitioned to cluster parallelism when ``spread`` and the scan
+    is narrower than that (see module docstring)."""
+    path = f"{sf_dir}/{name}.parquet"
+    reader = memo.cached(
+        spark, ("reader", path), path, lambda: spark.read.parquet(path)
     )
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(path)
-    _READER_CACHE[key] = df
-    return df
+    if not spread:
+        return reader
+    return memo.cached(spark, ("spread", path), path, lambda: _spread(reader))
 
 
-def spread(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Repartition ``df`` to cluster parallelism iff its current
-    partitioning cannot feed every core (see module docstring).
-
-    ``key`` (usually the parquet path) memoizes the partition-count
-    probe per session so repeated query builds skip the ~40 ms
-    plan->RDD conversion."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    memo_key = None
-    if key is not None:
-        try:
-            mtime = os.path.getmtime(key)
-        except OSError:
-            mtime = None
-        memo_key = (sc.applicationId, key, mtime)
-        cached = _DECISION.get(memo_key)
-        if cached is not None:
-            return df.repartition(target) if cached else df
+def _spread(df: DataFrame) -> DataFrame:
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         cur = df.rdd.getNumPartitions()
     except Exception:  # noqa: BLE001 — planning quirk: keep the plain scan
         return df
-    decision = cur < target
-    if memo_key is not None:
-        _DECISION[memo_key] = decision
-    return df.repartition(target) if decision else df
+    return df.repartition(target) if cur < target else df

@@ -7,6 +7,7 @@ import numpy as np
 
 from doclayout_yolo_spark.extract import (
     extract_document,
+    extract_documents,
     layout_blocks,
     parse_blocks,
 )
@@ -231,7 +232,6 @@ def test_gzip_payloads_inflate_transparently():
     import gzip
 
     from doclayout_yolo_spark.pdf import build_pdf
-    from doclayout_yolo_spark.pipeline import _extract_one
 
     html = _page("gzip payload body text").encode()
     t1, _, _ = extract_document(gzip.compress(html, mtime=0))
@@ -243,7 +243,7 @@ def test_gzip_payloads_inflate_transparently():
     assert t3 == "Zipped Pdf Title"
 
     corrupt = gzip.compress(html)[:-6] + b"\x00\x00"
-    text, regions, _m, err = _extract_one("u", corrupt)
+    text, regions, _m, err = extract_documents([corrupt])[0]
     assert text == "" and err is not None
 
 
@@ -311,11 +311,10 @@ def test_gzip_bomb_quarantines_not_oom():
     import gzip
 
     from doclayout_yolo_spark.extract import MAX_INFLATED_BYTES
-    from doclayout_yolo_spark.pipeline import _extract_one
 
     bomb = gzip.compress(b"\x00" * (MAX_INFLATED_BYTES + 1024), 9)
     assert len(bomb) < 2_000_000  # the whole point: tiny input
-    text, _r, _m, err = _extract_one("u", bomb)
+    text, _r, _m, err = extract_documents([bomb])[0]
     assert text == "" and err is not None and "inflates past" in err
 
 

@@ -409,10 +409,10 @@ def test_encrypted_pdf_quarantines_with_distinct_reason():
     assert is_encrypted_pdf(enc) and not is_encrypted_pdf(body)
     with _pytest.raises(EncryptedPdfError):
         parse_pdf_blocks(enc)
-    # through the quarantine wrapper: an error row, not a crash
-    from doclayout_yolo_spark.pipeline import _extract_one
+    # through the batched kernel's quarantine: an error row, not a crash
+    from doclayout_yolo_spark.extract import extract_documents
 
-    text, regions, _meta, err = _extract_one("u", enc)
+    text, regions, _meta, err = extract_documents([enc])[0]
     assert text == "" and regions == []
     assert err is not None and err.startswith("EncryptedPdfError")
 
@@ -427,7 +427,7 @@ def test_encrypted_pdf_quarantines_with_distinct_reason():
         b"%PDF-1.4\n1 0 obj\n<< /Length 8 /Filter /FlateDecode >>\n"
         b"stream\nBADBYTES\nendstream\nendobj\n"
     )
-    text2, _, _, err2 = _extract_one("u", corrupt)
+    text2, _, _, err2 = extract_documents([corrupt])[0]
     assert text2 == "" and err2 is None
 
 

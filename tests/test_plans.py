@@ -32,10 +32,12 @@ def test_flagship_scan_prunes_columns(spark):
 
 
 def test_extraction_query_path_shuffles_only_when_narrow(spark):
-    # r6: the query path never shuffles html payloads when the input
-    # already feeds every core (guide §8 — heavy opaque bytes move at
-    # most once; here not at all).  A single-partition input still gets
-    # the explicit bucket shuffle so the kernel stage is parallel.
+    # r6: the query path never shuffles html payloads on its own (guide
+    # §8 — heavy opaque bytes move at most once; here not at all): with
+    # num_partitions=None the kernel keeps the input's partitioning, and
+    # narrow fixture scans are widened where they are read
+    # (scan.table(..., spread=True)).  An explicit num_partitions is one
+    # bucket shuffle to exactly that many partitions.
     pdf = generate_pages_pandas(10)
     df = spark.createDataFrame(pdf, schema=PAGES_DDL)
     import re
@@ -118,7 +120,7 @@ def test_ivf_assignment_has_no_exchange(spark):
     plan = plan_of(_ivf_assigned(spark, SF_DIR), "simple")
     assert "MapInPandas" in plan
     # no KEYED exchange / join / window between scan and assignment —
-    # the scan-parallelism round-robin (scan.spread) is allowed: it
+    # the scan-parallelism round-robin (scan.table spread=True) is allowed: it
     # moves each row once, never funnels by key
     assert "Exchange hashpartitioning" not in plan
     assert "Exchange rangepartitioning" not in plan
@@ -136,7 +138,7 @@ def test_stratified_sample_prefilters_before_window(spark):
     plan = plan_of(stratified_sample(spark, SF_DIR), "simple")
     assert "MapInPandas" in plan
     # exactly one HASH exchange (the per-stratum window); the scan-
-    # parallelism round-robin repartition (scan.spread) is not a
+    # parallelism round-robin repartition (scan.table spread=True) is not a
     # per-stratum funnel and is excluded from the pin
     assert plan.count("Exchange hashpartitioning") == 1
     # the exchange consumes the pre-filtered MapInPandas output

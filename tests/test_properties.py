@@ -235,9 +235,9 @@ def test_quarantine_wrapper_never_raises_on_fuzz(raw):
     Arrow-unserializable text (lone surrogates): the partition-level
     reality of a 10^12-document crawl where poisoned payloads are a
     statistical certainty."""
-    from doclayout_yolo_spark.pipeline import _extract_one
+    from doclayout_yolo_spark.extract import extract_documents
 
-    text, regions, _meta, _err = _extract_one("https://fuzz.local/x", raw)
+    text, regions, _meta, _err = extract_documents([raw])[0]
     assert isinstance(text, str)
     text.encode("utf-8")  # no lone surrogates -> Arrow-safe
     for r in regions:

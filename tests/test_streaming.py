@@ -290,11 +290,13 @@ def test_streaming_session_windows(spark, tmp_path_factory):
 
 
 def test_quarantine_wrapper(monkeypatch):
-    def boom(raw, stage_acc=None):
+    from doclayout_yolo_spark import extract
+
+    def boom(raw):
         raise ValueError("poisoned document")
 
-    monkeypatch.setattr(pl, "extract_document", boom)
-    text, regions, meta, err = pl._extract_one("u", b"<p>x</p>")
+    monkeypatch.setattr(extract, "_parse_payload", boom)
+    text, regions, meta, err = extract.extract_documents([b"<p>x</p>"])[0]
     assert text == "" and regions == [] and meta["n_regions"] == 0
     assert err is not None and "poisoned" in err
 

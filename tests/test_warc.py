@@ -98,7 +98,7 @@ def test_warc_response_record_with_http_envelope_extracts():
     the extraction dispatcher strips it, so the extracted text is
     byte-identical to extracting the bare HTML."""
     from doclayout_yolo_spark.http import build_http_response
-    from doclayout_yolo_spark.pipeline import _extract_one
+    from doclayout_yolo_spark.extract import extract_documents
 
     html = (
         b"<html><head><title>T</title></head><body>"
@@ -111,7 +111,7 @@ def test_warc_response_record_with_http_envelope_extracts():
     )
     recs = parse_warc(blob)
     assert len(recs) == 1 and recs[0]["payload"] == envelope
-    t_env, r_env, _m1, e1 = _extract_one(recs[0]["uri"], recs[0]["payload"])
-    t_bare, r_bare, _m2, e2 = _extract_one(recs[0]["uri"], html)
+    t_env, r_env, _m1, e1 = extract_documents([recs[0]["payload"]])[0]
+    t_bare, r_bare, _m2, e2 = extract_documents([html])[0]
     assert e1 is None and e2 is None
     assert t_env == t_bare and len(r_env) == len(r_bare) > 0
