@@ -1,8 +1,10 @@
 """Per-query measurement harness for optimization work (guide §1.4):
 times any subset of the contract queries with a noop sink and can dump
-``explain("formatted")`` plans.  bench.py is FROZEN for the driver's
-measurement; this file exists so optimization rounds can isolate
-queries without touching it.
+``explain("formatted")`` plans.  Each query's JSON also carries the
+Janino compile count and compile ms of its timed reps, so a run shows
+recompilation (a codegen cache miss) without a debugger.  bench.py is
+FROZEN for the driver's measurement; this file exists so optimization
+rounds can isolate queries without touching it.
 
 Usage:
   python bench_extra.py q1_pricing_summary simhash64_hamming_pairs ...
@@ -27,6 +29,18 @@ from doclayout_yolo_spark.session import get_spark  # noqa: E402
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _codegen(spark) -> tuple[int, float]:
+    """Janino compilations and their total ms so far in this JVM (in
+    local mode that includes the executors' compilations)."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return (
+        metrics.METRIC_COMPILATION_TIME().getCount(),
+        codegen.compileTime() / 1e6,  # nanoseconds
+    )
 
 
 def main() -> None:
@@ -80,16 +94,24 @@ def main() -> None:
             continue
         _force(fn(spark, sf_dir))  # warmup (catalyst + codegen)
         runs = []
+        n0, ms0 = _codegen(spark)
         for _ in range(reps):
             t0 = time.time()
             _force(fn(spark, sf_dir))
             runs.append(time.time() - t0)
+        n1, ms1 = _codegen(spark)
         out[name] = {
             "best": round(min(runs), 3),
             "mean": round(sum(runs) / len(runs), 3),
             "runs": [round(r, 3) for r in runs],
+            "compiles": n1 - n0,
+            "compile_ms": round(ms1 - ms0, 1),
         }
-        print(f"{name:36s} best={out[name]['best']:7.3f} runs={out[name]['runs']}", file=sys.stderr)
+        print(
+            f"{name:36s} best={out[name]['best']:7.3f} runs={out[name]['runs']}"
+            f" compiles={n1 - n0}",
+            file=sys.stderr,
+        )
     spark.stop()
     print(json.dumps({"sf_dir": sf_dir, "cpus": cpus, "queries": out}))
 

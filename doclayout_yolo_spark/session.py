@@ -12,6 +12,35 @@ identical settings:
   Arrow round-trips; per-batch memory stays ~30 MB at Common-Crawl
   page weight, far under executor headroom; 4096 regressed again —
   worse pipelining).
+- each generated class compiled once per session (P11: the relational
+  work runs through whole-stage codegen; Janino compiles and the JIT
+  of each fresh class cost driver CPU).  Spark keeps compiled classes
+  in an LRU of ``spark.sql.codegen.cache.maxEntries`` (default 100)
+  keyed by source text.  The engine's working set is larger: the 139
+  contract queries at sf0.001 compile 1,231 distinct classes, the
+  five queries of the benchmark's ``contract_queries`` workload 142.
+  With the default the cache thrashes: a second sweep of the 139
+  queries in one session recompiled 1,644 classes (16.5 s of Janino
+  time), and every steady pass of the five recompiled 86-119.  With
+  ``CODEGEN_CACHE_ENTRIES`` = 4096 (3x headroom) and the next conf the
+  second sweep compiles 14 (in four join-heavy queries, likely the
+  second plan shapes described below) and the steady passes 0.
+  ``spark.sql.codegen.useIdInClassName=false`` takes the codegen stage
+  id out of ``GeneratedIteratorForCodegenStage<N>``: AQE numbers
+  stages as it creates them, so the same code gets another id (new
+  source text, a miss however large the cache) when it runs behind
+  other stages; with the large cache alone steady passes still
+  compiled 6-13 classes.  AQE can also pick the other build side of
+  a broadcast join when the other shuffle stage finishes first: a
+  second plan shape, whose classes compile once.  Memory: the
+  default evicts classes that mostly stay loaded (309 unloaded of
+  3,454 compiled over two sweeps); metaspace after the two sweeps was
+  193.5 MB with the default and 191.3 MB with both confs (after a
+  forced full GC 181.4 vs 191.3 MB: ~10 MB holds the whole working
+  set).  Both are settings of the session, not per-query options: the
+  cache size is a static conf, read once when the JVM's codegen cache
+  is built, and identical code hits the cache only if every query in
+  the session names its classes the same way.
 
 ``local_df`` is the one way driver-side rows (lineage, manifest,
 small dimension tables) become a DataFrame: built as an Arrow table,
@@ -26,6 +55,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 ARROW_BATCH_ROWS = 1024
+# Spark's compiled-class cache (default 100 entries) sized above the
+# engine's working set of generated classes; see the module docstring.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -64,6 +96,13 @@ def get_spark(
         # comparable CPU — at 100 TB the scan is IO-bound, so this is
         # a direct throughput lever for downstream readers
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # compile each generated class once per session: a cache that
+        # holds the working set, and class names without the codegen
+        # stage id, which AQE assigns in the order it creates stages
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
