@@ -4,16 +4,29 @@ Plan (SURVEY §3.1 Spark rendering):
 
     scan(pages) -> select(url, html)            # column pruning, P3
       -> withColumn(part_id = pmod(xxhash64(url), n_buckets))
-      -> [resume] LEFT ANTI JOIN manifest ON part_id   # exactly-once, P13
-      -> repartition(P, part_id)                # explicit shuffle, P8
-      -> mapInArrow(extract_kernel)             # fused Arrow kernel, P1/P11
-      -> write parquet partitioned by part_id   # Iceberg-analog sink
-    + per-task lineage rows via accumulator -> lineage parquet
-    + manifest rows (one per completed bucket) -> manifest parquet
+      -> choose buckets:                        # per entry point
+           run_extraction_job:      LEFT ANTI JOIN manifest ON part_id
+           reprocess_stale_buckets: part_id IN stale buckets
+           run_incremental_job:     part_id IN touched buckets
+      -> _extract_and_commit:                   # the one sink path
+           repartition(P, part_id)              # explicit shuffle, P8
+           -> mapInArrow(extract_kernel)        # fused Arrow kernel, P1/P11
+           -> write parquet partitioned by part_id  (append, or
+              dynamic overwrite of the buckets present)
+           -> lineage append (per-task accumulator rows, one file)
+           -> ONE manifest append (one file): the buckets the lineage
+              says were written, stamped KERNEL_VERSION, plus the
+              tombstones of emptied buckets
 
+Commit order is data, then lineage, then manifest: a crash before the
+manifest append leaves data no manifest row claims, which the next
+``run_extraction_job`` deletes (``reconcile``) and re-extracts.
 Lineage and manifest rows are built on the driver and committed from
 Arrow-built local frames (``session.local_df``): the plan is a
-JVM-only LocalTableScan, so a commit runs no Python worker task.
+JVM-only LocalTableScan, so a commit runs no Python worker task.  Both
+side tables are read with their declared schemas (``LINEAGE_DDL``,
+``MANIFEST_DDL``), so a read samples no footer and runs no schema-merge
+job; columns that older files lack read as null and are coalesced.
 
 At 100 TB this maps 1:1 onto an Iceberg table: ``part_id`` becomes the
 ``bucket(url)`` partition transform, the manifest+data write becomes a
@@ -30,16 +43,16 @@ this (SURVEY §5.6).
 
 from __future__ import annotations
 
-import os
 import time
+from collections.abc import Sequence
 
 from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import KERNEL_VERSION, extract_documents
 from .session import local_df
-from .tableformat import FORMAT, TOMBSTONE
+from .tableformat import FORMAT
 
 SPANS_DDL = (
     "array<struct<region_id:int,cls:int,name:string,conf:double,"
@@ -258,19 +271,10 @@ def extract_pages(
 # ---------------------------------------------------------------------------
 
 
-# Storage concerns (data/manifest layout, commit, tombstone, reconcile,
+# Storage concerns (data/manifest layout, commit, reconcile,
 # snapshot-staleness) live behind the TableFormat seam — see
 # tableformat.py for the 1:1 mapping of each operation to the real
-# Iceberg call a production deployment swaps in.  The thin wrappers
-# below keep the historical pipeline API.
-
-
-def _manifest_path(output_path: str) -> str:
-    return FORMAT.manifest_path(output_path)
-
-
-def _lineage_path(output_path: str) -> str:
-    return FORMAT.lineage_path(output_path)
+# Iceberg call a production deployment swaps in.
 
 
 def data_path(output_path: str) -> str:
@@ -281,10 +285,6 @@ def completed_buckets(spark: SparkSession, output_path: str) -> DataFrame | None
     return FORMAT.committed_buckets(spark, output_path, KERNEL_VERSION)
 
 
-def _reconcile_orphans(spark: SparkSession, output_path: str) -> list[int]:
-    return FORMAT.reconcile(spark, output_path)
-
-
 LINEAGE_DDL = (
     "task_partition_id int, attempt_number int, "
     "part_ids array<int>, n_docs long, "
@@ -292,6 +292,7 @@ LINEAGE_DDL = (
     "parse_s double, detect_s double, nms_s double, assemble_s double, "
     "kernel_version string"
 )
+_STAGE_COLS = ("parse_s", "detect_s", "nms_s", "assemble_s")
 
 
 def _dedup_lineage(rows) -> list[dict]:
@@ -311,24 +312,73 @@ def _dedup_lineage(rows) -> list[dict]:
 
 
 def _write_lineage(spark: SparkSession, lineage_rows: list[dict], output_path: str) -> None:
+    """Append one job's lineage rows as ONE parquet file."""
     if not lineage_rows:
         return
+    cols = [c.split()[0] for c in LINEAGE_DDL.split(", ")]
     local_df(
-        spark,
-        [
-            (
-                r["task_partition_id"], r["attempt_number"],
-                r["part_ids"], r["n_docs"],
-                r["n_regions"], r["bytes_in"], float(r["t_start"]),
-                float(r["t_end"]),
-                float(r.get("parse_s", 0.0)), float(r.get("detect_s", 0.0)),
-                float(r.get("nms_s", 0.0)), float(r.get("assemble_s", 0.0)),
-                r["kernel_version"],
-            )
-            for r in lineage_rows
-        ],
-        LINEAGE_DDL,
-    ).write.mode("append").parquet(_lineage_path(output_path))
+        spark, [tuple(r[c] for c in cols) for r in lineage_rows], LINEAGE_DDL
+    ).coalesce(1).write.mode("append").parquet(FORMAT.lineage_path(output_path))
+
+
+def _extract_and_commit(
+    spark: SparkSession,
+    bucketed: DataFrame,
+    output_path: str,
+    num_partitions: int | None,
+    overwrite: bool,
+    deleted: Sequence[int] = (),
+) -> tuple[int, list[int], float, dict]:
+    """The sink's one extract-and-commit path.  ``bucketed`` holds
+    (url, html, part_id) rows; they are grouped by bucket, run through
+    the Arrow kernel and written under ``data/part_id=<p>`` — appended,
+    or with ``overwrite`` replaced by DYNAMIC partition overwrite, which
+    rewrites only the buckets present in the write (idempotent: a
+    crashed re-run repeats harmlessly).  Then the task lineage rows are
+    appended and ONE manifest commit records exactly the buckets those
+    rows say were written, at ``KERNEL_VERSION``, plus the ``deleted``
+    tombstones.  Returns (n_docs, written buckets, write wall seconds,
+    observed metrics)."""
+    sc = spark.sparkContext
+    lineage_acc = sc.accumulator([], _ListAccum())
+    parts = num_partitions or sc.defaultParallelism
+    out = bucketed.repartition(parts, "part_id").mapInArrow(
+        lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
+    )
+    # Observation: the idiomatic Spark metrics hook — aggregates ride
+    # the write action itself (no second job), complementing the
+    # row-level lineage table with run-level counters
+    obs = Observation("extract_metrics")
+    out = out.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.length("extracted_text")).alias("chars"),
+        F.count(F.col("error")).alias("errors"),
+    )
+    writer = out.write.partitionBy("part_id")
+    if overwrite:
+        writer = writer.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    else:
+        writer = writer.mode("append")
+    t0 = time.time()
+    writer.parquet(data_path(output_path))
+    wall = time.time() - t0
+
+    # lineage + manifest (post-write: in Iceberg these rows join the
+    # same atomic snapshot commit as the data files)
+    lineage_rows = _dedup_lineage(lineage_acc.value)
+    written = sorted({p for r in lineage_rows for p in r["part_ids"]})
+    _write_lineage(spark, lineage_rows, output_path)
+    FORMAT.commit(spark, output_path, KERNEL_VERSION, written, deleted)
+    n_docs = sum(r["n_docs"] for r in lineage_rows)
+    return n_docs, written, wall, obs.get
+
+
+def _buckets_of(pages: DataFrame, n_buckets: int, part_ids: list[int]) -> DataFrame:
+    """(url, html, part_id) rows of ``pages`` in the buckets ``part_ids``."""
+    return with_part_id(pages.select("url", "html"), n_buckets).filter(
+        F.col("part_id").isin(part_ids)
+    )
 
 
 def run_extraction_job(
@@ -350,48 +400,19 @@ def run_extraction_job(
     part_id) exists for the kill/resume test to simulate a mid-job
     crash.
     """
-    sc = spark.sparkContext
-    orphans = _reconcile_orphans(spark, output_path)
-    lineage_acc = sc.accumulator([], _ListAccum())
-
+    orphans = FORMAT.reconcile(spark, output_path)
     bucketed = with_part_id(pages.select("url", "html"), n_buckets)
     done = completed_buckets(spark, output_path)
     if done is not None:
         bucketed = bucketed.join(F.broadcast(done), "part_id", "left_anti")
     if bucket_filter is not None:
         bucketed = bucketed.filter(bucket_filter)
-
-    parts = num_partitions or sc.defaultParallelism
-    out = bucketed.repartition(parts, "part_id").mapInArrow(
-        lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
+    n_docs, written, wall, observed = _extract_and_commit(
+        spark, bucketed, output_path, num_partitions, overwrite=False
     )
-    # Observation: the idiomatic Spark metrics hook — aggregates ride
-    # the write action itself (no second job), complementing the
-    # row-level lineage table with run-level counters
-    from pyspark.sql import Observation  # noqa: PLC0415
-
-    obs = Observation("extract_metrics")
-    out = out.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.length("extracted_text")).alias("chars"),
-        F.count(F.col("error")).alias("errors"),
-    )
-    t0 = time.time()
-    out.write.mode("append").partitionBy("part_id").parquet(data_path(output_path))
-    wall = time.time() - t0
-    observed = obs.get
-
-    # lineage + manifest (post-write: in Iceberg these rows join the
-    # same atomic snapshot commit as the data files)
-    lineage_rows = _dedup_lineage(lineage_acc.value)
-    n_docs = sum(r["n_docs"] for r in lineage_rows)
-    processed = sorted({p for r in lineage_rows for p in r["part_ids"]})
-    _write_lineage(spark, lineage_rows, output_path)
-    FORMAT.commit_buckets(spark, output_path, processed, KERNEL_VERSION)
     return {
         "n_docs": n_docs,
-        "n_buckets_processed": len(processed),
+        "n_buckets_processed": len(written),
         "n_orphan_buckets_repaired": len(orphans),
         "wall_s": wall,
         "docs_per_sec": n_docs / wall if wall > 0 else 0.0,
@@ -406,28 +427,19 @@ def read_extracted(spark: SparkSession, output_path: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, output_path: str) -> DataFrame:
-    """Lineage rows with schema evolution handled: round-1 outputs
-    predate the attempt_number column, and a resumed job appends
-    new-schema files into the same _lineage dir — a plain parquet read
-    could drop the column or fail depending on which footer the reader
-    samples.  mergeSchema unions the schemas; legacy rows surface with
-    attempt_number = 0 (first attempt, the only kind round 1 recorded)."""
-    df = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(_lineage_path(output_path))
+    """Lineage rows read with the declared ``LINEAGE_DDL`` (no footer
+    sampling, no schema-merge job).  Files of older rounds lack
+    columns: round-1 files have no attempt_number, pre-round-5 files no
+    per-stage seconds.  Those read as null and surface as
+    attempt_number = 0 (first attempt, the only kind round 1 recorded)
+    and 0.0 seconds."""
+    df = spark.read.schema(LINEAGE_DDL).parquet(FORMAT.lineage_path(output_path))
+    return df.withColumns(
+        {
+            "attempt_number": F.coalesce("attempt_number", F.lit(0)),
+            **{c: F.coalesce(c, F.lit(0.0)) for c in _STAGE_COLS},
+        }
     )
-    if "attempt_number" not in df.columns:
-        df = df.withColumn("attempt_number", F.lit(0))
-    df = df.withColumn(
-        "attempt_number", F.coalesce(F.col("attempt_number"), F.lit(0))
-    )
-    # per-stage speed columns arrived in round 5; legacy rows -> 0.0
-    for c in ("parse_s", "detect_s", "nms_s", "assemble_s"):
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(0.0))
-        else:
-            df = df.withColumn(c, F.coalesce(F.col(c), F.lit(0.0)))
-    return df
 
 
 def stale_buckets(
@@ -449,35 +461,22 @@ def reprocess_stale_buckets(
     n_buckets: int = DEFAULT_BUCKETS,
     num_partitions: int | None = None,
 ) -> dict:
-    """Re-extract only the buckets stamped with an older kernel
-    version.  Data partitions are replaced via DYNAMIC partition
-    overwrite (idempotent — a crashed re-run repeats harmlessly), then
-    the manifest gains current-version rows, after which
-    ``stale_buckets`` reports empty.  Old manifest rows stay as
-    history, exactly like superseded Iceberg snapshots."""
+    """Re-extract the buckets stamped with an older kernel version
+    from ``pages``, through the sink's one extract-and-commit path with
+    dynamic partition overwrite.  The manifest commit stamps only the
+    buckets the lineage says were rewritten, so after it
+    ``stale_buckets`` no longer lists them; a stale bucket with no url
+    in ``pages`` is not rewritten, stays stale and is not counted in
+    ``n_buckets_reprocessed``.  Old manifest rows stay as history,
+    exactly like superseded Iceberg snapshots."""
     stale = stale_buckets(spark, output_path)
     if not stale:
         return {"n_docs": 0, "n_buckets_reprocessed": 0}
-    sc = spark.sparkContext
-    lineage_acc = sc.accumulator([], _ListAccum())
-    bucketed = with_part_id(pages.select("url", "html"), n_buckets).filter(
-        F.col("part_id").isin(stale)
+    n_docs, written, _wall, _obs = _extract_and_commit(
+        spark, _buckets_of(pages, n_buckets, stale), output_path,
+        num_partitions, overwrite=True,
     )
-    parts = num_partitions or sc.defaultParallelism
-    out = bucketed.repartition(parts, "part_id").mapInArrow(
-        lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
-    )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(data_path(output_path))
-    )
-    lineage_rows = _dedup_lineage(lineage_acc.value)
-    n_docs = sum(r["n_docs"] for r in lineage_rows)
-    _write_lineage(spark, lineage_rows, output_path)
-    FORMAT.commit_buckets(spark, output_path, stale, KERNEL_VERSION)
-    return {"n_docs": n_docs, "n_buckets_reprocessed": len(stale)}
+    return {"n_docs": n_docs, "n_buckets_reprocessed": len(written)}
 
 
 def snapshot_diff(old_pages: DataFrame, new_pages: DataFrame) -> DataFrame:
@@ -515,21 +514,23 @@ def run_incremental_job(
 ) -> dict:
     """Incremental crawl update: diff the two snapshots, then
     re-extract ONLY the buckets touched by added / changed / removed
-    urls — each affected bucket is rebuilt from the NEW snapshot via
+    urls.  Each touched bucket that still has urls is rebuilt from the
+    NEW snapshot through the sink's one extract-and-commit path with
     dynamic partition overwrite (idempotent: a crashed run repeats
-    harmlessly, exactly like ``reprocess_stale_buckets``), and a
-    bucket whose urls all vanished has its data partition deleted (the
-    delete-file action an Iceberg snapshot commit would record).
+    harmlessly); a touched bucket whose urls all vanished has its data
+    partition deleted and is tombstoned in the SAME manifest append
+    (the delete-file half of one Iceberg overwrite snapshot).
     Untouched buckets are never read, never rewritten.
 
     Cost at crawl scale: one url-hash join (the diff, aggregated once
     per (bucket, status)) + re-extraction of EVERY document in each
-    touched bucket, unchanged ones included.  That is proportional to
-    the touched buckets, not to the changed content: 30 added or
-    changed urls spread over 64 buckets touch about half of them, and
-    re-extract ~1,000 of 2,000 documents (3% of that work is useful).
-    Untouched buckets cost nothing, which is what bounds a recrawl at
-    10^12 documents when its changes cluster in few buckets."""
+    touched bucket, unchanged ones included, + one lineage append and
+    one manifest append.  That is proportional to the touched buckets,
+    not to the changed content: 30 added or changed urls spread over 64
+    buckets touch about half of them, and re-extract ~1,000 of 2,000
+    documents (3% of that work is useful).  Untouched buckets cost
+    nothing, which is what bounds a recrawl at 10^12 documents when its
+    changes cluster in few buckets."""
     # ONE aggregation answers everything the driver needs: per-status
     # counts, the touched buckets (any non-unchanged url) and the live
     # buckets (any url still present in the new snapshot).  Bounded by
@@ -557,37 +558,16 @@ def run_incremental_job(
     }
     if not stale:
         return result
-    sc = spark.sparkContext
-    lineage_acc = sc.accumulator([], _ListAccum())
-    bucketed = with_part_id(new_pages.select("url", "html"), n_buckets).filter(
-        F.col("part_id").isin(stale)
-    )
-    parts = num_partitions or sc.defaultParallelism
-    out = bucketed.repartition(parts, "part_id").mapInArrow(
-        lambda it: _extract_batches(it, lineage_acc), schema=OUTPUT_DDL
-    )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(data_path(output_path))
-    )
     # dynamic overwrite only replaces partitions PRESENT in the write:
-    # a bucket emptied by removals must be deleted explicitly, AND
-    # recorded as a manifest tombstone — deleting only the data would
-    # leave completed_buckets permanently claiming a bucket that has no
-    # data directory, indistinguishable from a committed one at the
-    # next _reconcile_orphans pass (r4 advisor finding)
-    emptied = [p for p in stale if p not in live]
-    for p in emptied:
-        FORMAT.delete_partition_dir(output_path, p)
-    lineage_rows = _dedup_lineage(lineage_acc.value)
-    result["n_docs"] = sum(r["n_docs"] for r in lineage_rows)
-    _write_lineage(spark, lineage_rows, output_path)
-    FORMAT.commit_buckets(
-        spark, output_path, [p for p in stale if p in live], KERNEL_VERSION
+    # a bucket emptied by removals is deleted AND tombstoned by the
+    # commit — deleting only the data would leave completed_buckets
+    # claiming a bucket with no data directory, indistinguishable from
+    # a committed one at the next reconcile (r4 advisor finding)
+    result["n_docs"], _written, _wall, _obs = _extract_and_commit(
+        spark, _buckets_of(new_pages, n_buckets, stale), output_path,
+        num_partitions, overwrite=True,
+        deleted=[p for p in stale if p not in live],
     )
-    FORMAT.tombstone_buckets(spark, output_path, emptied)
     return result
 
 

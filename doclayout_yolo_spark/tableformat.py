@@ -1,4 +1,4 @@
-"""Table-format seam: the five storage operations the extraction
+"""Table-format seam: the four storage operations the extraction
 pipeline needs from its output table, implemented here as a
 parquet+manifest EMULATION (this sandbox ships no Iceberg runtime jar)
 and documented 1:1 against the Iceberg calls a real deployment swaps
@@ -11,16 +11,17 @@ Emulation -> Iceberg mapping (Iceberg 1.x Java/Spark API):
 ===========================  ==============================================
 emulation (this class)       real Iceberg call
 ===========================  ==============================================
-``commit_buckets``           ``table.newAppend().appendFile(...).commit()``
-                             / for reprocess: ``newOverwrite()...commit()``
-                             — ONE atomic snapshot covering data files AND
-                             metadata; the emulation's separate data-write
-                             + manifest-append is why ``reconcile`` exists
-``tombstone_buckets``        ``table.newDelete().deleteFromRowFilter(
-                             Expressions.equal("part_id", p)).commit()`` —
-                             a delete-files snapshot; the emulation appends
-                             a ``__deleted__`` manifest row and removes the
-                             partition directory
+``commit``                   ``table.newOverwrite()`` (``OverwriteFiles``)
+                             ``.addFile(...)`` for the written buckets,
+                             ``.deleteFile(...)`` for the replaced and the
+                             emptied ones, ``.commit()`` — ONE atomic
+                             snapshot per job covering data files AND
+                             metadata (a pure append is ``newAppend()``).
+                             The emulation removes the emptied buckets'
+                             directories and appends their ``__deleted__``
+                             tombstones and the written buckets' rows in
+                             one manifest file; its separate data-write +
+                             manifest-append is why ``reconcile`` exists
 ``committed_buckets``        ``table.currentSnapshot()`` + partition
                              metadata table (``table.partitions``): which
                              partitions exist in the current snapshot
@@ -36,18 +37,22 @@ emulation (this class)       real Iceberg call
 ===========================  ==============================================
 
 The manifest is an append-only parquet dir of
-``(part_id, kernel_version, seq)`` rows; a bucket's NEWEST row decides
-liveness (a ``__deleted__`` tombstone supersedes earlier commits, a
-re-commit supersedes the tombstone) — exactly the role of Iceberg's
-snapshot log, linearized by the driver-side ``seq`` stamp instead of a
-catalog's atomic swap.
+``(part_id, kernel_version, seq)`` rows, one file per commit, read with
+the declared ``MANIFEST_DDL`` (no footer sampling, no schema-merge
+job); a bucket's NEWEST row decides liveness (a ``__deleted__``
+tombstone supersedes earlier commits, a re-commit supersedes the
+tombstone) — exactly the role of Iceberg's snapshot log, linearized by
+the driver-side ``seq`` stamp instead of a catalog's atomic swap.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
+from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,46 +82,20 @@ class ParquetManifestFormat:
         return os.path.join(table_path, "_lineage")
 
     # -- manifest I/O ------------------------------------------------------
-    def _append_manifest(
-        self, spark: SparkSession, table_path: str,
-        rows: list[tuple[int, str]],
-    ) -> None:
-        """Append (part_id, kernel_version) rows stamped with a
-        MONOTONE ``seq``: driver wall clock, floored to strictly above
-        the manifest's current max — a backwards NTP step between a
-        commit and a later tombstone must not let the commit win
-        ``_latest_rows`` (r5 review finding; the clock alone is not
-        monotone).  One tiny manifest read per append — appends are
-        per-JOB events, not per-row."""
-        if not rows:
-            return
-        now = time.time()
-        m = self.read_manifest(spark, table_path)
-        if m is not None:
-            last = m.agg(F.max("seq")).collect()[0][0]
-            if last is not None and now <= last:
-                now = last + 1e-3
-        local_df(
-            spark, [(p, v, now) for p, v in rows], MANIFEST_DDL
-        ).write.mode("append").parquet(self.manifest_path(table_path))
-
     def read_manifest(
         self, spark: SparkSession, table_path: str
     ) -> DataFrame | None:
-        """Manifest rows with schema evolution handled: rows written
-        before round 5 predate the ``seq`` column; mergeSchema surfaces
-        them with seq = null, coalesced to 0.0 (older than any stamped
-        row)."""
+        """Manifest rows, read with the declared ``MANIFEST_DDL``: the
+        read starts no Spark job.  Files written before round 5 lack
+        the ``seq`` column; it reads as null and is coalesced to 0.0
+        (older than any stamped row).  ``None`` if no manifest exists."""
         try:
-            df = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(self.manifest_path(table_path))
+            df = spark.read.schema(MANIFEST_DDL).parquet(
+                self.manifest_path(table_path)
             )
-        except Exception:
+        except AnalysisException:
             return None
-        if "seq" not in df.columns:
-            df = df.withColumn("seq", F.lit(0.0))
-        return df.withColumn("seq", F.coalesce(F.col("seq"), F.lit(0.0)))
+        return df.withColumn("seq", F.coalesce("seq", F.lit(0.0)))
 
     @staticmethod
     def _latest_rows(m: DataFrame, version: str) -> DataFrame:
@@ -133,26 +112,39 @@ class ParquetManifestFormat:
             F.max_by("kernel_version", order).alias("kernel_version")
         )
 
-    # -- the five seam operations -----------------------------------------
-    def commit_buckets(
-        self, spark: SparkSession, table_path: str,
-        part_ids: list[int], version: str,
+    # -- the four seam operations -----------------------------------------
+    def commit(
+        self, spark: SparkSession, table_path: str, version: str,
+        written: Sequence[int] = (), deleted: Sequence[int] = (),
     ) -> None:
-        """Record ``part_ids`` as committed by ``version`` (Iceberg:
-        the metadata half of one atomic append/overwrite snapshot)."""
-        self._append_manifest(
-            spark, table_path, [(p, version) for p in part_ids]
-        )
-
-    def tombstone_buckets(
-        self, spark: SparkSession, table_path: str, part_ids: list[int]
-    ) -> None:
-        """Record ``part_ids`` as deleted (Iceberg: a delete-files
-        snapshot).  Data directories are removed separately by the
-        caller — in Iceberg both halves are one commit."""
-        self._append_manifest(
-            spark, table_path, [(p, TOMBSTONE) for p in part_ids]
-        )
+        """One snapshot: record ``written`` as committed by ``version``
+        and ``deleted`` as tombstoned, after removing the deleted
+        buckets' data directories (Iceberg: one ``OverwriteFiles``
+        commit).  The rows go out as ONE manifest file, stamped with a
+        MONOTONE ``seq``: driver wall clock, floored to strictly above
+        the manifest's current max — a backwards NTP step between a
+        commit and a later tombstone must not let the commit win
+        ``_latest_rows`` (r5 review finding; the clock alone is not
+        monotone).  One tiny manifest read per commit — commits are
+        per-JOB events, not per-row."""
+        rows = [(p, version) for p in written]
+        rows += [(p, TOMBSTONE) for p in deleted]
+        if not rows:
+            return
+        for p in deleted:
+            shutil.rmtree(
+                os.path.join(self.data_path(table_path), f"part_id={p}"),
+                ignore_errors=True,
+            )
+        now = time.time()
+        m = self.read_manifest(spark, table_path)
+        if m is not None:
+            last = m.agg(F.max("seq")).collect()[0][0]
+            if last is not None and now <= last:
+                now = last + 1e-3
+        local_df(
+            spark, [(p, v, now) for p, v in rows], MANIFEST_DDL
+        ).coalesce(1).write.mode("append").parquet(self.manifest_path(table_path))
 
     def committed_buckets(
         self, spark: SparkSession, table_path: str, version: str
@@ -194,8 +186,6 @@ class ParquetManifestFormat:
         re-extracted deterministically).  With a real Iceberg catalog
         data + metadata share one atomic snapshot commit and this step
         DISAPPEARS (the related maintenance is deleteOrphanFiles)."""
-        import shutil  # noqa: PLC0415
-
         dp = self.data_path(table_path)
         if not os.path.isdir(dp):
             return []
@@ -215,17 +205,7 @@ class ParquetManifestFormat:
                 orphans.append(pid)
         return sorted(orphans)
 
-    def delete_partition_dir(self, table_path: str, part_id: int) -> None:
-        """Remove one bucket's data directory (the file-removal half of
-        a delete snapshot; pair with ``tombstone_buckets``)."""
-        import shutil  # noqa: PLC0415
-
-        shutil.rmtree(
-            os.path.join(self.data_path(table_path), f"part_id={part_id}"),
-            ignore_errors=True,
-        )
-
 
 #: the pipeline's table format.  A real deployment swaps this instance
-#: for an Iceberg-backed implementation of the same five operations.
+#: for an Iceberg-backed implementation of the same four operations.
 FORMAT = ParquetManifestFormat()

@@ -288,6 +288,36 @@ def test_kernel_version_reprocessing(spark, tmp_path_factory):
     assert r2["n_docs"] == 0
 
 
+def test_reprocess_stamps_only_buckets_it_rewrote(spark, tmp_path_factory):
+    """A stale bucket with no url in ``pages`` is not rewritten, so it
+    must not be stamped with the current kernel or counted as
+    reprocessed: it stays stale, its old rows untouched."""
+    from doclayout_yolo_spark.pipeline import (
+        FORMAT,
+        reprocess_stale_buckets,
+        stale_buckets,
+        with_part_id,
+    )
+
+    out = str(tmp_path_factory.mktemp("reproc_missing") / "o")
+    pages = generate_pages_df(spark, 40, partitions=4)
+    run_extraction_job(spark, pages, out, n_buckets=8)
+    FORMAT.commit(spark, out, "0.9.0", written=[3])
+    assert stale_buckets(spark, out) == [3]
+    old3 = sorted(
+        tuple(r) for r in read_extracted(spark, out).filter("part_id = 3").collect()
+    )
+    assert old3
+
+    without3 = with_part_id(pages, 8).filter("part_id != 3").drop("part_id")
+    res = reprocess_stale_buckets(spark, without3, out, n_buckets=8)
+    assert res == {"n_docs": 0, "n_buckets_reprocessed": 0}
+    assert stale_buckets(spark, out) == [3]
+    assert sorted(
+        tuple(r) for r in read_extracted(spark, out).filter("part_id = 3").collect()
+    ) == old3
+
+
 def test_observed_metrics_match_lineage(spark, tmp_path_factory):
     # the Observation counters ride the write action and must agree
     # with the lineage-accumulator totals — including on a fully
@@ -321,8 +351,8 @@ def test_manifest_seq_is_monotone_despite_clock(spark, tmp_path_factory):
         schema="part_id int, kernel_version string, seq double",
     ).write.mode("append").parquet(FORMAT.manifest_path(out))
     # "now" < future, yet the tombstone must supersede the commit
-    FORMAT.tombstone_buckets(spark, out, [1])
+    FORMAT.commit(spark, out, "1.0.0", deleted=[1])
     assert completed_buckets(spark, out).count() == 0
     # and a re-commit supersedes the tombstone in turn
-    FORMAT.commit_buckets(spark, out, [1], "1.0.0")
+    FORMAT.commit(spark, out, "1.0.0", written=[1])
     assert [r["part_id"] for r in completed_buckets(spark, out).collect()] == [1]
