@@ -43,8 +43,10 @@ this (SURVEY §5.6).
 
 from __future__ import annotations
 
+import operator
 import time
 from collections.abc import Sequence
+from itertools import repeat
 
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -79,6 +81,43 @@ class _ListAccum(AccumulatorParam):
         return a
 
 
+def _arrow_array(values: list, type_):
+    """One output column of the Arrow kernels, built from a Python list
+    with ``pa.Array.from_buffers`` over NumPy buffers; ``.equals`` the
+    ``pa.array(values, type_)`` it replaces.  ``pa.array`` is never
+    called because its array-like probe imports pandas into the Python
+    worker (+38 MB RSS per worker, measured), and no kernel here uses
+    pandas.  ``type_`` is ``pa.int32()`` or ``pa.float64()``, whose
+    values must not be None, or ``pa.string()``: int32 offsets, plus a
+    validity bitmap when some values are None."""
+    import numpy as np  # noqa: PLC0415 — executor-side import
+    import pyarrow as pa  # noqa: PLC0415
+
+    n = len(values)
+    if type_ != pa.string():
+        dtype = {"int32": np.int32, "double": np.float64}[str(type_)]
+        arr = np.asarray(values, dtype=dtype)
+        return pa.Array.from_buffers(type_, n, [None, pa.py_buffer(arr)])
+    validity, n_null = None, 0
+    if None in values:
+        valid = np.fromiter(map(operator.is_not, values, repeat(None)), np.bool_, n)
+        n_null = n - int(valid.sum())
+        validity = pa.py_buffer(np.packbits(valid, bitorder="little"))
+        values = ["" if v is None else v for v in values]
+    if all(map(str.isascii, values)):  # byte lengths are the str lengths
+        lengths, data = map(len, values), "".join(values).encode("ascii")
+    else:
+        encoded = list(map(str.encode, values))
+        lengths, data = map(len, encoded), b"".join(encoded)
+    if len(data) > np.iinfo(np.int32).max:
+        raise OverflowError("string column over 2 GiB: string offsets are int32")
+    offsets = np.zeros(n + 1, np.int32)
+    np.cumsum(np.fromiter(lengths, np.int32, n), out=offsets[1:])
+    return pa.Array.from_buffers(
+        type_, n, [validity, pa.py_buffer(offsets), pa.py_buffer(data)], null_count=n_null
+    )
+
+
 def _extract_batches(batches, lineage_acc=None):
     """mapInArrow kernel: iterator of Arrow record batches of (url,
     html, part_id) -> iterator of output record batches.  One fused
@@ -93,7 +132,11 @@ def _extract_batches(batches, lineage_acc=None):
     once per batch from flat field lists via StructArray/
     ListArray.from_arrays; url/html/part_id pass through as Arrow
     columns.  Row values are identical — only the serialization path
-    changed (golden byte-identity + contract sweeps pin this)."""
+    changed (golden byte-identity + contract sweeps pin this).
+
+    Every built column goes through :func:`_arrow_array`, never
+    ``pa.array``, so the worker running this kernel never imports
+    pandas (``tests/test_arrow_kernels.py`` pins both)."""
     import pyarrow as pa  # noqa: PLC0415 — executor-side import
 
     from pyspark import TaskContext  # noqa: PLC0415
@@ -175,29 +218,28 @@ def _extract_batches(batches, lineage_acc=None):
             n_regions_total += meta["n_regions"]
             bytes_in += len(raw)
             part_ids.add(pid)
+        i32, f64, txt = pa.int32(), pa.float64(), pa.string()
         struct_arr = pa.StructArray.from_arrays(
             [
-                pa.array(f_rid, pa.int32()), pa.array(f_cls, pa.int32()),
-                pa.array(f_name, pa.string()), pa.array(f_conf, pa.float64()),
-                pa.array(f_x1, pa.float64()), pa.array(f_y1, pa.float64()),
-                pa.array(f_x2, pa.float64()), pa.array(f_y2, pa.float64()),
-                pa.array(f_start, pa.int32()), pa.array(f_end, pa.int32()),
+                _arrow_array(f_rid, i32), _arrow_array(f_cls, i32),
+                _arrow_array(f_name, txt), _arrow_array(f_conf, f64),
+                _arrow_array(f_x1, f64), _arrow_array(f_y1, f64),
+                _arrow_array(f_x2, f64), _arrow_array(f_y2, f64),
+                _arrow_array(f_start, i32), _arrow_array(f_end, i32),
             ],
             fields=list(span_struct),
         )
-        spans_arr = pa.ListArray.from_arrays(
-            pa.array(offsets, pa.int32()), struct_arr
-        )
+        spans_arr = pa.ListArray.from_arrays(_arrow_array(offsets, i32), struct_arr)
         yield pa.RecordBatch.from_arrays(
             [
-                rb.column(rb.schema.get_field_index("url")).cast(pa.string()),
-                pid_col.cast(pa.int32()),
-                pa.array(texts, pa.string()),
+                rb.column(rb.schema.get_field_index("url")).cast(txt),
+                pid_col.cast(i32),
+                _arrow_array(texts, txt),
                 spans_arr,
-                pa.array(nregs, pa.int32()),
-                pa.array(nblks, pa.int32()),
-                pa.array(pageh, pa.float64()),
-                pa.array(errors, pa.string()),
+                _arrow_array(nregs, i32),
+                _arrow_array(nblks, i32),
+                _arrow_array(pageh, f64),
+                _arrow_array(errors, txt),
             ],
             schema=out_schema,
         )
@@ -585,13 +627,14 @@ def extract_outlinks_df(pages: DataFrame) -> DataFrame:
     contributes no links rather than failing the task (P9 parity)."""
 
     def kern(batches):
-        import pandas as pd  # noqa: PLC0415
+        import pyarrow as pa  # noqa: PLC0415
 
         from .extract import extract_outlinks  # noqa: PLC0415
 
-        for pdf in batches:
+        for rb in batches:
             urls, pos, tgt = [], [], []
-            for u, h in zip(pdf["url"], pdf["html"]):
+            htmls = rb.column("html").to_pylist()
+            for u, h in zip(rb.column("url").to_pylist(), htmls):
                 try:
                     links = extract_outlinks(
                         u, bytes(h) if h is not None else b""
@@ -602,9 +645,16 @@ def extract_outlinks_df(pages: DataFrame) -> DataFrame:
                     urls.append(u)
                     pos.append(i)
                     tgt.append(t)
-            yield pd.DataFrame({"url": urls, "link_pos": pos, "target": tgt})
+            yield pa.RecordBatch.from_arrays(
+                [
+                    _arrow_array(urls, pa.string()),
+                    _arrow_array(pos, pa.int32()),
+                    _arrow_array(tgt, pa.string()),
+                ],
+                names=["url", "link_pos", "target"],
+            )
 
-    return pages.select("url", "html").mapInPandas(kern, schema=OUTLINKS_DDL)
+    return pages.select("url", "html").mapInArrow(kern, schema=OUTLINKS_DDL)
 
 
 METADATA_DDL = (
@@ -621,38 +671,30 @@ def extract_metadata_df(pages: DataFrame) -> DataFrame:
     (P9 parity)."""
 
     def kern(batches):
-        import pandas as pd  # noqa: PLC0415
+        import pyarrow as pa  # noqa: PLC0415
 
         from .extract import extract_page_metadata  # noqa: PLC0415
 
-        for pdf in batches:
-            rows = []
-            for u, h in zip(pdf["url"], pdf["html"]):
+        fields = ("title", "description", "og_title", "canonical", "lang")
+        for rb in batches:
+            cols = {f: [] for f in fields}
+            htmls = rb.column("html").to_pylist()
+            for u, h in zip(rb.column("url").to_pylist(), htmls):
                 try:
                     md = extract_page_metadata(
                         u, bytes(h) if h is not None else b""
                     )
                 except Exception:  # noqa: BLE001 — quarantine parity
                     md = {}
-                rows.append(
-                    {
-                        "url": u,
-                        "title": md.get("title"),
-                        "description": md.get("description"),
-                        "og_title": md.get("og_title"),
-                        "canonical": md.get("canonical"),
-                        "lang": md.get("lang"),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "title", "description", "og_title",
-                    "canonical", "lang",
-                ],
+                for f, vals in cols.items():
+                    vals.append(md.get(f))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("url").cast(pa.string())]
+                + [_arrow_array(vals, pa.string()) for vals in cols.values()],
+                names=["url", *fields],
             )
 
-    return pages.select("url", "html").mapInPandas(kern, schema=METADATA_DDL)
+    return pages.select("url", "html").mapInArrow(kern, schema=METADATA_DDL)
 
 
 # ---------------------------------------------------------------------------
