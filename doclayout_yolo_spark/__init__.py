@@ -44,8 +44,9 @@ without the re-read; local[4]).  Every worker that runs a package
 kernel imports the package when it unpickles the kernel, so this is
 the one place that reaches them all; no Spark conf can, because
 ``PythonWorkerFactory`` puts ``pyspark.zip`` first on the workers'
-``PYTHONPATH``.  An archive read before the import is re-read once
-here so that its stamp is exact.
+``PYTHONPATH``.  An archive with no stamp yet (one read before the
+import, as ``pyspark.zip`` is) is re-read once at its first
+``invalidate_caches`` call, which records the stamp.
 """
 
 import sys
@@ -62,7 +63,6 @@ if sys.version_info < (3, 12):
     import os
     import zipimport
 
-    _read_directory = zipimport._read_directory
     _invalidate_caches = zipimport.zipimporter.invalidate_caches
     _stamps: dict[str, tuple[int, int, int]] = {}
 
@@ -73,33 +73,17 @@ if sys.version_info < (3, 12):
             return None
         return st.st_mtime_ns, st.st_size, st.st_ino
 
-    def _read_directory_stamped(archive):
-        # stat before the read: a change during the read shows as a
-        # new stamp at the next check and re-reads then
-        stamp = _stamp(archive)
-        files = _read_directory(archive)
-        if stamp is not None:
-            _stamps[archive] = stamp
-        return files
-
     def _invalidate_if_changed(self):
+        # stat before the read: a change during the read shows as a new
+        # stamp at the next call and re-reads then
+        stamp = _stamp(self.archive)
         files = zipimport._zip_directory_cache.get(self.archive)
-        stamp = _stamps.get(self.archive)
-        if files is None or stamp is None or stamp != _stamp(self.archive):
+        if stamp is None or files is None or _stamps.get(self.archive) != stamp:
+            _stamps[self.archive] = stamp
             _invalidate_caches(self)
         else:
             self._files = files
 
-    def _install_zip_guard():
-        zipimport._read_directory = _read_directory_stamped
-        cache = zipimport._zip_directory_cache
-        for archive in list(cache):
-            try:
-                cache[archive] = _read_directory_stamped(archive)
-            except zipimport.ZipImportError:
-                cache.pop(archive, None)
-        zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
-
-    _install_zip_guard()
+    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
 
 __version__ = "0.1.0"

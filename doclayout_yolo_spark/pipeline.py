@@ -104,11 +104,8 @@ def _arrow_array(values: list, type_):
         n_null = n - int(valid.sum())
         validity = pa.py_buffer(np.packbits(valid, bitorder="little"))
         values = ["" if v is None else v for v in values]
-    if all(map(str.isascii, values)):  # byte lengths are the str lengths
-        lengths, data = map(len, values), "".join(values).encode("ascii")
-    else:
-        encoded = list(map(str.encode, values))
-        lengths, data = map(len, encoded), b"".join(encoded)
+    encoded = [v.encode() for v in values]
+    lengths, data = map(len, encoded), b"".join(encoded)
     if len(data) > np.iinfo(np.int32).max:
         raise OverflowError("string column over 2 GiB: string offsets are int32")
     offsets = np.zeros(n + 1, np.int32)

@@ -4,10 +4,11 @@ pyspark's worker calls ``importlib.invalidate_caches()`` at the start of
 every task; on Python < 3.12 each zipimporter then re-reads its whole
 archive directory (``pyspark.zip``: 1,328 entries, ~14 importers).
 Importing ``doclayout_yolo_spark`` makes the re-read happen only when the
-archive's ``(st_mtime_ns, st_size, st_ino)`` changed.  These tests pin
+archive's ``(st_mtime_ns, st_size, st_ino)`` changed (and once to record
+the stamp of an archive read before the guard saw it).  These tests pin
 both halves: no re-read while the archive is unchanged, a re-read (and
 the new module importable) once it changes, and in Spark the same
-directory object across the tasks of one Python worker.
+directory object across the tasks of one Python worker after its first.
 """
 
 from __future__ import annotations
@@ -51,7 +52,11 @@ def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch):
             return read_directory(path)
 
         monkeypatch.setattr(zipimport, "_read_directory", counting)
+        # the first call stamps the archive (at most one read), and
+        # while it is unchanged the next call reads nothing
         importlib.invalidate_caches()
+        assert reads.count(archive) <= 1
+        reads.clear()
         importlib.invalidate_caches()
         assert reads == []
 
@@ -92,10 +97,13 @@ def test_worker_keeps_pyspark_zip_directory_across_tasks(spark):
             names=["pid", "archive", "dir_id"],
         )
 
-    # single-partition jobs until one Python worker has run two of
-    # them (idle workers are handed out round-robin)
+    # single-partition jobs until one Python worker has run three of
+    # them (idle workers are handed out round-robin).  A worker's first
+    # task here may be the one that imports the package, so the guard
+    # first runs, and stamps pyspark.zip with one re-read, at its next
+    # task: the directory must stay the same from then on.
     seen: dict[str, list[str]] = {}
-    for _ in range(24):
+    for _ in range(36):
         (row,) = (
             spark.range(1, numPartitions=1)
             .mapInArrow(report, "pid string, archive string, dir_id string")
@@ -104,7 +112,7 @@ def test_worker_keeps_pyspark_zip_directory_across_tasks(spark):
         if row.archive is None:
             pytest.skip("Python workers import pyspark from a directory")
         seen.setdefault(row.pid, []).append(row.dir_id)
-        if len(seen[row.pid]) > 1:
+        if len(seen[row.pid]) > 2:
             break
-    assert any(len(ids) > 1 for ids in seen.values()), "no worker was reused"
-    assert all(len(set(ids)) == 1 for ids in seen.values()), seen
+    assert any(len(ids) > 2 for ids in seen.values()), "no worker ran three tasks"
+    assert all(len(set(ids[1:])) <= 1 for ids in seen.values()), seen
