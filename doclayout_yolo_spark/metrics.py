@@ -16,21 +16,28 @@ Reference semantics reproduced numerically (not ported):
   interpolation: utils/metrics.py:496-526
 - per-class loop over 10 IoU thresholds: utils/metrics.py:528-616
 
-The match stage is a per-document ``applyInPandas`` kernel (both sides
-tiny per group — never a global theta join); the AP reduction runs on
-the aggregated match table, which is small (one row per detection), so
-the final 101-point integration executes in NumPy on the collected
-per-class curves exactly like the reference's single-process finalize.
+The match stage is a per-document ``applyInArrow`` kernel (both sides
+tiny per group — never a global theta join); the AP reduction is a
+per-class ``applyInArrow`` kernel over the match table (one row per
+detection), so the 101-point integration runs in NumPy on each class's
+whole curve, like the reference's single-process finalize.
+
+Every kernel here reads its columns with ``pipeline._numpy_of`` and
+builds its output with ``pipeline._arrow_table``, and the module does
+not import pandas: the Python workers that unpickle these kernels load
+none (``tests/test_arrow_kernels.py`` pins both).  Ties are broken by
+stable NumPy sorts: the match and confusion kernels sort each side by
+id, the AP kernel by conf descending, then doc, then det_id.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .kernels import box_iou
+from .pipeline import _arrow_table, _numpy_of
 from .session import local_df
 
 IOU_THRESHOLDS = np.round(np.arange(0.5, 1.0, 0.05), 2)  # 10 thresholds
@@ -79,32 +86,37 @@ MATCH_DDL = "doc string, det_id long, cls long, conf double, " + ", ".join(
 )
 
 
-def _match_group(key, pdf):
-    doc = key[0]
-    # applyInPandas delivers rows in shuffle-arrival order, and the
-    # np.unique dedup in greedy_match is POSITIONAL — sort both sides
-    # by their id so tied-IoU outcomes are run-deterministic (and match
-    # the id-ordered golden-oracle generator)
-    pdf = pdf.sort_values("det_id")
-    dets = pdf[pdf["side"] == "det"]
-    gts = pdf[pdf["side"] == "gt"]
-    boxes_d = dets[["x1", "y1", "x2", "y2"]].to_numpy(dtype=np.float32)
-    boxes_g = gts[["x1", "y1", "x2", "y2"]].to_numpy(dtype=np.float32)
-    tp = greedy_match(
-        boxes_d,
-        dets["cls"].to_numpy(),
-        boxes_g,
-        gts["cls"].to_numpy(),
-    )
-    out = {
-        "doc": str(doc),
-        "det_id": dets["det_id"].to_numpy(),
-        "cls": dets["cls"].to_numpy(),
-        "conf": dets["conf"].to_numpy(),
+def _split_sides(table):
+    """(det, gt) column dicts of one doc's union rows, each side in
+    det_id order.  The group arrives in shuffle order, and the np.unique
+    dedups in greedy_match and confusion_pairs are POSITIONAL, so both
+    sides are sorted by id: tied-IoU outcomes are run-deterministic and
+    match the id-ordered golden-oracle generator."""
+    ids = _numpy_of(table.column("det_id"))
+    is_det = np.array([s == "det" for s in table.column("side").to_pylist()], bool)
+    cols = {
+        "det_id": ids.astype(np.int64),
+        "cls": _numpy_of(table.column("cls")).astype(np.int64),
+        "conf": _numpy_of(table.column("conf")).astype(np.float64),
+        "box": np.stack(
+            [_numpy_of(table.column(c)) for c in ("x1", "y1", "x2", "y2")], axis=1
+        ).astype(np.float32),
     }
-    for i in range(tp.shape[1]):
-        out[f"tp{i}"] = tp[:, i]
-    return pd.DataFrame(out)
+    order = np.argsort(ids, kind="stable")
+    return tuple(
+        {k: v[idx] for k, v in cols.items()}
+        for idx in (order[is_det[order]], order[~is_det[order]])
+    )
+
+
+def _match_group(key, table):
+    det, gt = _split_sides(table)
+    tp = greedy_match(det["box"], det["cls"], gt["box"], gt["cls"])
+    return _arrow_table(
+        MATCH_DDL,
+        [[str(key[0].as_py())] * len(tp), det["det_id"], det["cls"], det["conf"]]
+        + [tp[:, i] for i in range(tp.shape[1])],
+    )
 
 
 def match_table(dets: DataFrame, gts: DataFrame) -> DataFrame:
@@ -126,7 +138,7 @@ def match_table(dets: DataFrame, gts: DataFrame) -> DataFrame:
         F.lit(0.0).alias("conf"), "cls", F.lit("gt").alias("side"),
     )
     both = d.unionByName(g)
-    return both.groupBy("doc").applyInPandas(_match_group, schema=MATCH_DDL)
+    return both.groupBy("doc").applyInArrow(_match_group, schema=MATCH_DDL)
 
 
 def ap_interp(recall: np.ndarray, precision: np.ndarray) -> float:
@@ -202,12 +214,22 @@ def confusion_pairs(
 CONFUSION_DDL = "pred_cls long, gt_cls long"
 
 
+def _confusion_cells(table, nc: int, conf_thres: float, iou_thres: float):
+    """One doc's confusion increments as a ``CONFUSION_DDL`` table."""
+    det, gt = _split_sides(table)
+    pairs = confusion_pairs(
+        det["box"], det["cls"], det["conf"], gt["box"], gt["cls"],
+        nc, conf_thres, iou_thres,
+    )
+    return _arrow_table(CONFUSION_DDL, [[p for p, _ in pairs], [g for _, g in pairs]])
+
+
 def confusion_matrix(
     dets: DataFrame, gts: DataFrame, nc: int,
     conf_thres: float = 0.25, iou_thres: float = 0.45,
 ) -> DataFrame:
     """Distributed (nc+1)^2 detection confusion matrix: per-doc NumPy
-    increments via applyInPandas (one shuffle on doc), then a count
+    increments via applyInArrow (one shuffle on doc), then a count
     aggregation padded with zero cells so every (pred_cls, gt_cls)
     combination appears exactly once (nc = background row/col)."""
     d = dets.select(
@@ -222,26 +244,13 @@ def confusion_matrix(
         F.lit(0.0).alias("conf"), "cls", F.lit("gt").alias("side"),
     )
 
-    def _group(key, pdf):
-        # sort by id: the positional np.unique dedup must not depend on
-        # shuffle arrival order (ties in IoU exist in real data)
-        pdf = pdf.sort_values("det_id")
-        dd = pdf[pdf["side"] == "det"]
-        gg = pdf[pdf["side"] == "gt"]
-        pairs = confusion_pairs(
-            dd[["x1", "y1", "x2", "y2"]].to_numpy(np.float32),
-            dd["cls"].to_numpy(np.int64),
-            dd["conf"].to_numpy(np.float64),
-            gg[["x1", "y1", "x2", "y2"]].to_numpy(np.float32),
-            gg["cls"].to_numpy(np.int64),
-            nc, conf_thres, iou_thres,
-        )
-        return pd.DataFrame(pairs, columns=["pred_cls", "gt_cls"])
+    def _group(key, table):
+        return _confusion_cells(table, nc, conf_thres, iou_thres)
 
     cells = (
         d.unionByName(g)
         .groupBy("doc")
-        .applyInPandas(_group, schema=CONFUSION_DDL)
+        .applyInArrow(_group, schema=CONFUSION_DDL)
         .groupBy("pred_cls", "gt_cls")
         .agg(F.count("*").alias("n"))
     )
@@ -257,12 +266,39 @@ def confusion_matrix(
 
 AP_DDL = "cls long, iou_idx int, iou_thr double, ap double"
 
+
+def _ap_curves(cls: int, table, n_gt: int):
+    """One class's per-threshold AP rows (``AP_DDL``) from its match
+    rows: sorted by conf descending, then doc, then det_id (stable), so
+    tied confidences rank the same on every run; a class without
+    ground truth yields no rows (AP undefined, all detections FP — the
+    reference only loops gt classes)."""
+    t = len(IOU_THRESHOLDS)
+    if n_gt == 0:
+        return _arrow_table(AP_DDL, [[], [], [], []])
+    _, doc_rank = np.unique(
+        np.array(table.column("doc").to_pylist(), dtype=object), return_inverse=True
+    )
+    order = np.lexsort(
+        (_numpy_of(table.column("det_id")), doc_rank, -_numpy_of(table.column("conf")))
+    )
+    npreds = np.arange(1, len(order) + 1, dtype=np.float64)
+    ap = []
+    for i in range(t):
+        tp = np.array(table.column(f"tp{i}").to_pylist(), dtype=np.float64)
+        ctp = tp[order].cumsum()
+        ap.append(ap_interp(ctp / n_gt, ctp / npreds))
+    return _arrow_table(
+        AP_DDL, [[cls] * t, list(range(t)), [float(x) for x in IOU_THRESHOLDS], ap]
+    )
+
+
 # (applicationId, persisted-ap) of recent ap_per_class calls, oldest
 # first.  Bounded LRU rather than evict-every-call: Spark's
 # CacheManager matches cached plans STRUCTURALLY, so a repeated
 # identical metrics query (bench reps, sweeps) silently reuses the
 # previous call's materialized ap and skips the whole match_table
-# applyInPandas pipeline — evicting on every call forfeited that and
+# applyInArrow pipeline — evicting on every call forfeited that and
 # cost a measured 4x on detection_map.  The bound answers the r3
 # ADVICE accumulation concern (each entry is nc x 10 rows).
 _AP_PERSISTED: list = []
@@ -275,7 +311,7 @@ def ap_per_class(
     """match table -> per-(cls, iou_threshold) AP, fully distributed.
 
     One shuffle (hash on cls); each class's curve (sort by conf desc,
-    cumsum, 101-point integral) runs inside ``applyInPandas`` — never a
+    cumsum, 101-point integral) runs inside ``applyInArrow`` — never a
     per-detection driver collect, so 10^8 detections reduce to
     nc x 10 rows executor-side.  Classes that have ground-truth labels
     but ZERO detections still contribute ap=0 rows (the reference
@@ -304,38 +340,23 @@ def ap_per_class(
     else:
         gt_b = {int(k): int(v) for k, v in gt_counts.items() if int(v) > 0}
 
-    def _ap_group(key, pdf):
-        cls = int(key[0])
-        n_gt = int(pdf["n_gt"].iloc[0]) if lazy else gt_b.get(cls, 0)
-        cols = {"cls": [], "iou_idx": [], "iou_thr": [], "ap": []}
-        if n_gt == 0:
-            # detections for a class with no ground truth: all FP, AP
-            # undefined -> excluded (reference only loops gt classes)
-            return pd.DataFrame(cols)
-        pdf = pdf.sort_values(
-            ["conf", "doc", "det_id"], ascending=[False, True, True]
-        )
-        npreds = np.arange(1, len(pdf) + 1, dtype=np.float64)
-        for i in range(t):
-            ctp = pdf[f"tp{i}"].to_numpy(dtype=np.float64).cumsum()
-            cols["cls"].append(cls)
-            cols["iou_idx"].append(i)
-            cols["iou_thr"].append(float(IOU_THRESHOLDS[i]))
-            cols["ap"].append(ap_interp(ctp / n_gt, ctp / npreds))
-        return pd.DataFrame(cols)
+    def _ap_group(key, table):
+        cls = key[0].as_py()
+        n_gt = _numpy_of(table.column("n_gt"))[0] if lazy else gt_b.get(cls, 0)
+        return _ap_curves(cls, table, int(n_gt))
 
     from pyspark import StorageLevel  # noqa: PLC0415
 
     # persisted: both the result branch and the zero-fill anti-join
     # below consume it — without the cache the whole match_table
-    # applyInPandas pipeline would execute a second time just to list
+    # applyInArrow pipeline would execute a second time just to list
     # the classes present.  The cache entry is nc x iou_thresholds
     # rows, negligible at any scale.  Long-lived sessions invoking
     # metrics repeatedly must not accumulate persisted handles, so each
     # call releases the previous call's (already-consumed) entry.
     ap = (
         matches.groupBy("cls")
-        .applyInPandas(_ap_group, schema=AP_DDL)
+        .applyInArrow(_ap_group, schema=AP_DDL)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     app = matches.sparkSession.sparkContext.applicationId
@@ -394,7 +415,7 @@ def ap_per_class(
     return ap.unionByName(missing)
 
 
-def summarize(ap_df: pd.DataFrame) -> dict:
+def summarize(ap_df: "pandas.DataFrame") -> dict:
     """mAP50 / mAP50-95 means over classes (metrics.py:656-744, A8)."""
     if ap_df.empty:
         return {"map50": 0.0, "map50_95": 0.0}

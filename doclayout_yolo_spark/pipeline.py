@@ -81,37 +81,82 @@ class _ListAccum(AccumulatorParam):
         return a
 
 
-def _arrow_array(values: list, type_):
+_NUMPY_TYPES = {"int32": "int32", "int64": "int64", "float": "float32", "double": "float64"}
+
+
+def _arrow_array(values, type_):
     """One output column of the Arrow kernels, built from a Python list
-    with ``pa.Array.from_buffers`` over NumPy buffers; ``.equals`` the
-    ``pa.array(values, type_)`` it replaces.  ``pa.array`` is never
-    called because its array-like probe imports pandas into the Python
-    worker (+38 MB RSS per worker, measured), and no kernel here uses
-    pandas.  ``type_`` is ``pa.int32()`` or ``pa.float64()``, whose
-    values must not be None, or ``pa.string()``: int32 offsets, plus a
-    validity bitmap when some values are None."""
+    (or a NumPy array) with ``pa.Array.from_buffers`` over NumPy
+    buffers; ``.equals`` the ``pa.array(values, type_)`` it replaces.
+    ``pa.array`` is never called because its array-like probe imports
+    pandas into the Python worker (+38 MB RSS per worker, measured),
+    and no kernel here uses pandas.  ``type_`` is ``pa.int32()``,
+    ``pa.int64()``, ``pa.float64()``, ``pa.bool_()``, ``pa.string()``
+    or ``pa.binary()``; a None value becomes a null (validity bitmap).
+    Strings and binaries take int32 offsets."""
     import numpy as np  # noqa: PLC0415 — executor-side import
     import pyarrow as pa  # noqa: PLC0415
 
     n = len(values)
-    if type_ != pa.string():
-        dtype = {"int32": np.int32, "double": np.float64}[str(type_)]
-        arr = np.asarray(values, dtype=dtype)
-        return pa.Array.from_buffers(type_, n, [None, pa.py_buffer(arr)])
+    kind = str(type_)
     validity, n_null = None, 0
-    if None in values:
+    if not isinstance(values, np.ndarray) and None in values:
         valid = np.fromiter(map(operator.is_not, values, repeat(None)), np.bool_, n)
         n_null = n - int(valid.sum())
         validity = pa.py_buffer(np.packbits(valid, bitorder="little"))
-        values = ["" if v is None else v for v in values]
-    encoded = [v.encode() for v in values]
+        fill = {"string": "", "binary": b""}.get(kind, 0)
+        values = [fill if v is None else v for v in values]
+    if kind == "bool":
+        bits = np.packbits(np.asarray(values, np.bool_), bitorder="little")
+        return pa.Array.from_buffers(type_, n, [validity, pa.py_buffer(bits)], null_count=n_null)
+    if kind not in ("string", "binary"):
+        arr = np.ascontiguousarray(values, dtype=_NUMPY_TYPES[kind])
+        return pa.Array.from_buffers(type_, n, [validity, pa.py_buffer(arr)], null_count=n_null)
+    encoded = [v.encode() for v in values] if kind == "string" else values
     lengths, data = map(len, encoded), b"".join(encoded)
     if len(data) > np.iinfo(np.int32).max:
-        raise OverflowError("string column over 2 GiB: string offsets are int32")
+        raise OverflowError(f"{kind} column over 2 GiB: offsets are int32")
     offsets = np.zeros(n + 1, np.int32)
     np.cumsum(np.fromiter(lengths, np.int32, n), out=offsets[1:])
     return pa.Array.from_buffers(
         type_, n, [validity, pa.py_buffer(offsets), pa.py_buffer(data)], null_count=n_null
+    )
+
+
+_DDL_TYPES = {"int": "int32", "long": "int64", "double": "float64",
+              "boolean": "bool_", "string": "string", "binary": "binary"}
+
+
+def _arrow_table(ddl: str, columns: list):
+    """The result of an Arrow kernel whose Spark schema is the flat
+    ``ddl`` (``"name type, ..."`` over int/long/double/boolean/string/
+    binary), from one list or NumPy array per column, each built with
+    :func:`_arrow_array`.  The types are the exact ones
+    ``mapInArrow``/``applyInArrow`` check the result against."""
+    import pyarrow as pa  # noqa: PLC0415 — executor-side import
+
+    schema = pa.schema(
+        [(name, getattr(pa, _DDL_TYPES[t])()) for name, t in map(str.split, ddl.split(","))]
+    )
+    return pa.Table.from_arrays(
+        [_arrow_array(c, f.type) for c, f in zip(columns, schema)], schema=schema
+    )
+
+
+def _numpy_of(col):
+    """A null-free int32/int64/float32/float64 Arrow column (Array or
+    ChunkedArray) as a NumPy array, read from its data buffer.  The
+    kernels' way in, mirroring :func:`_arrow_array` on the way out:
+    ``Array.to_numpy`` imports pandas into the worker."""
+    import numpy as np  # noqa: PLC0415 — executor-side import
+
+    if hasattr(col, "combine_chunks"):
+        col = col.combine_chunks()
+    if col.null_count:
+        raise ValueError(f"{col.type} column has {col.null_count} nulls")
+    dtype = np.dtype(_NUMPY_TYPES[str(col.type)])
+    return np.frombuffer(
+        col.buffers()[1], dtype, len(col), col.offset * dtype.itemsize
     )
 
 

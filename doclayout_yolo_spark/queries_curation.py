@@ -934,11 +934,48 @@ FROM s ORDER BY skey, doc_id LIMIT {WS_K}
 # header block PREPENDED INSIDE their payload — a parser that splits on
 # the magic string would shear these records; the oracle's closed-form
 # expectations (lengths + md5 straight from the documents table) prove
-# it doesn't.  Scale: applyInPandas keyed by file id — one file per
+# it doesn't.  Scale: applyInArrow keyed by file id — one file per
 # task, zero further shuffle, the exact shape of a 10^6-file crawl
 # ingest.
 
 WARC_FILES = 25
+WARC_DDL = "doc_id long, rec_index long, content_length long, payload_md5 string"
+
+
+def _warc_file(key, table):
+    """applyInArrow kernel: one file's (doc_id, payload_txt) rows ->
+    a WARC blob written in doc_id order and parsed back, one
+    ``WARC_DDL`` row per parsed record."""
+    import hashlib  # noqa: PLC0415
+
+    import numpy as np  # noqa: PLC0415
+
+    from .pipeline import _arrow_table, _numpy_of  # noqa: PLC0415
+    from .warc import build_warc, parse_warc  # noqa: PLC0415
+
+    ids = _numpy_of(table.column("doc_id"))
+    texts = table.column("payload_txt").to_pylist()
+    recs = parse_warc(
+        build_warc(
+            [
+                (
+                    f"https://w{int(ids[i])}.example/p",
+                    "2026-01-01T00:00:00Z",
+                    str(texts[i]).encode("utf-8"),
+                )
+                for i in np.argsort(ids, kind="stable")
+            ]
+        )
+    )
+    return _arrow_table(
+        WARC_DDL,
+        [
+            [int(r["uri"][9:].split(".")[0]) for r in recs],
+            list(range(len(recs))),
+            [len(r["payload"]) for r in recs],
+            [hashlib.md5(r["payload"]).hexdigest() for r in recs],
+        ],
+    )
 
 
 def warc_roundtrip(spark, sf_dir):
@@ -949,44 +986,7 @@ def warc_roundtrip(spark, sf_dir):
         " concat('WARC/1.0\\r\\nContent-Length: 3\\r\\n\\r\\nxyz', text)"
         " ELSE text END AS payload_txt",
     )
-
-    def kernel(key, pdf):
-        import hashlib  # noqa: PLC0415
-
-        import pandas as pd  # noqa: PLC0415
-
-        from .warc import build_warc, parse_warc  # noqa: PLC0415
-
-        pdf = pdf.sort_values("doc_id")
-        blob = build_warc(
-            [
-                (
-                    f"https://w{int(r.doc_id)}.example/p",
-                    "2026-01-01T00:00:00Z",
-                    str(r.payload_txt).encode("utf-8"),
-                )
-                for r in pdf.itertuples()
-            ]
-        )
-        recs = parse_warc(blob)
-        return pd.DataFrame(
-            {
-                "doc_id": [int(r["uri"][9:].split(".")[0]) for r in recs],
-                "rec_index": list(range(len(recs))),
-                "content_length": [len(r["payload"]) for r in recs],
-                "payload_md5": [
-                    hashlib.md5(r["payload"]).hexdigest() for r in recs
-                ],
-            }
-        )
-
-    return (
-        d.groupBy("file_id")
-        .applyInPandas(
-            kernel,
-            schema="doc_id long, rec_index long, content_length long, payload_md5 string",
-        )
-    )
+    return d.groupBy("file_id").applyInArrow(_warc_file, schema=WARC_DDL)
 
 
 WARC_SQL = f"""

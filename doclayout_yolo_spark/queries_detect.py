@@ -460,63 +460,70 @@ def _pdf_pages_from_documents(spark, sf_dir, compress=False, style="Tj", objstm=
     return d.mapInPandas(kernel, schema="url string, html binary")
 
 
+def _pdf_batches(batches, compress, style, objstm):
+    """(doc_id, text) Arrow batches -> (url, part_id, html) batches of
+    synthesized PDFs, byte-identical to ``_pdf_pages_from_documents``.
+    Columns are built with ``pipeline._arrow_array``, so the worker
+    loads no pandas."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    from .pdf import build_pdf  # noqa: PLC0415
+    from .pipeline import _arrow_array  # noqa: PLC0415
+
+    for rb in batches:
+        ids = rb.column(rb.schema.get_field_index("doc_id")).to_pylist()
+        texts = rb.column(rb.schema.get_field_index("text")).to_pylist()
+        urls, htmls = [], []
+        for doc_id, text in zip(ids, texts):
+            # latin-1 projection mirrored in the oracle closed
+            # form (same as _pdf_pages_from_documents)
+            safe = str(text).encode("latin-1", "replace").decode("latin-1")
+            urls.append(f"https://testdata.local/pdf/{int(doc_id)}.pdf")
+            comp = (
+                compress[int(doc_id) % len(compress)]
+                if isinstance(compress, list)
+                else compress
+            )
+            htmls.append(
+                build_pdf(
+                    [
+                        (f"Doc {int(doc_id)}", 24.0, 60.0, 80.0),
+                        (safe, 12.0, 60.0, 150.0),
+                        ("copyright example", 9.0, 60.0, 760.0),
+                    ],
+                    compress=comp,
+                    style=style,
+                    objstm=objstm,
+                )
+            )
+        yield pa.RecordBatch.from_arrays(
+            [
+                _arrow_array(urls, pa.string()),
+                _arrow_array([0] * len(urls), pa.int32()),
+                _arrow_array(htmls, pa.binary()),
+            ],
+            names=["url", "part_id", "html"],
+        )
+
+
 def _pdf_extracted(spark, sf_dir, compress=False, style="Tj", objstm=False):
     """FUSED PDF synthesis + extraction: one mapInArrow kernel, one
     JVM<->Python crossing (r6, guide §4.1: every Python boundary pays
     a serialize/transpose each way — the old two-kernel chain shipped
     every synthesized PDF JVM->Python->JVM->Python->JVM).  The synth
-    loop is byte-identical to ``_pdf_pages_from_documents`` and the
-    extraction delegates to the shared ``pipeline._extract_batches``
-    kernel, so extracted rows are identical to the unfused
-    ``extract_pages`` path (oracle-pinned).  ``part_id`` is a constant
-    0 here: the PDF contract queries never select it (bucketing
-    belongs to the sink path, which keeps the unfused operator)."""
+    loop (``_pdf_batches``) is byte-identical to
+    ``_pdf_pages_from_documents`` and the extraction delegates to the
+    shared ``pipeline._extract_batches`` kernel, so extracted rows are
+    identical to the unfused ``extract_pages`` path (oracle-pinned).
+    ``part_id`` is a constant 0 here: the PDF contract queries never
+    select it (bucketing belongs to the sink path, which keeps the
+    unfused operator)."""
     from .pipeline import OUTPUT_DDL, _extract_batches  # noqa: PLC0415
 
     d = scan.table(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
     def kern(batches):
-        import pyarrow as pa  # noqa: PLC0415
-
-        from doclayout_yolo_spark.pdf import build_pdf  # noqa: PLC0415
-
-        def synth():
-            for rb in batches:
-                ids = rb.column(rb.schema.get_field_index("doc_id")).to_pylist()
-                texts = rb.column(rb.schema.get_field_index("text")).to_pylist()
-                urls, htmls = [], []
-                for doc_id, text in zip(ids, texts):
-                    # latin-1 projection mirrored in the oracle closed
-                    # form (same as _pdf_pages_from_documents)
-                    safe = str(text).encode("latin-1", "replace").decode("latin-1")
-                    urls.append(f"https://testdata.local/pdf/{int(doc_id)}.pdf")
-                    comp = (
-                        compress[int(doc_id) % len(compress)]
-                        if isinstance(compress, list)
-                        else compress
-                    )
-                    htmls.append(
-                        build_pdf(
-                            [
-                                (f"Doc {int(doc_id)}", 24.0, 60.0, 80.0),
-                                (safe, 12.0, 60.0, 150.0),
-                                ("copyright example", 9.0, 60.0, 760.0),
-                            ],
-                            compress=comp,
-                            style=style,
-                            objstm=objstm,
-                        )
-                    )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(urls, pa.string()),
-                        pa.array([0] * len(urls), pa.int32()),
-                        pa.array(htmls, pa.binary()),
-                    ],
-                    names=["url", "part_id", "html"],
-                )
-
-        yield from _extract_batches(synth())
+        yield from _extract_batches(_pdf_batches(batches, compress, style, objstm))
 
     return d.mapInArrow(kern, OUTPUT_DDL).select(
         "url", "extracted_text", "n_regions", "n_blocks"

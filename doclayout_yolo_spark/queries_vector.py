@@ -136,7 +136,10 @@ FROM n GROUP BY label
 # analog: binary column + typed metadata).  The decode step is a
 # deterministic fake (real decode libs aren't in this container); the
 # Spark-side plumbing — binary column, Arrow batches, mapInPandas UDF
-# signature, schema — is real and oracle-checked.
+# signature, schema — is real and oracle-checked.  It is one of the
+# pandas-UDF sites still to move to mapInArrow (ROADMAP direction C);
+# the LSH signature kernels below already build their output with
+# ``pipeline._arrow_table`` and load no pandas into their workers.
 
 DECODE_DDL = (
     "doc_id long, n_bytes long, first_byte long, last_byte long, n_space_bytes long"
@@ -429,37 +432,41 @@ def _plane_matrix(n_planes: int) -> np.ndarray:
     return planes
 
 
-def _sig_bits(vec_col: "object", planes: np.ndarray) -> np.ndarray:
-    """(n, n_planes) bool sign bits for a pandas column of vectors —
-    ONE NumPy matmul per Arrow batch.  The round-1 plan built signatures
-    relationally (posexplode x crossJoin: 512 shuffled rows per vector,
-    5x10^11 rows at 10^9 vectors); this computes the identical bits
-    in-batch with zero extra shuffle.  round(9) guard: fold-order drift
-    between engines must never flip a sign bit."""
-    v = np.array(vec_col.tolist(), dtype=np.float64).reshape(-1, DIM)
+def _sig_bits(vec_col, planes: np.ndarray) -> np.ndarray:
+    """(n, n_planes) bool sign bits for an Arrow list<double> column of
+    DIM-vectors — ONE NumPy matmul per Arrow batch.  The round-1 plan
+    built signatures relationally (posexplode x crossJoin: 512 shuffled
+    rows per vector, 5x10^11 rows at 10^9 vectors); this computes the
+    identical bits in-batch with zero extra shuffle.  round(9) guard:
+    fold-order drift between engines must never flip a sign bit."""
+    from .pipeline import _numpy_of  # noqa: PLC0415
+
+    v = _numpy_of(vec_col.flatten()).reshape(-1, DIM)
     return _round_half_away(v @ planes.T, 9) > 0
+
+
+SIG_DDL = "vec_id long, bucket long"
+
+
+def _signatures_kernel(batches):
+    """mapInArrow kernel: (vec_id, vec) -> ``SIG_DDL``, the N_PLANES
+    sign bits of each vector as one bucket number."""
+    from .pipeline import _arrow_table, _numpy_of  # noqa: PLC0415
+
+    planes = _plane_matrix(N_PLANES)
+    weights = (1 << np.arange(N_PLANES)).astype(np.int64)
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        bits = _sig_bits(rb.column("vec"), planes)
+        yield from _arrow_table(
+            SIG_DDL, [_numpy_of(rb.column("vec_id")), bits @ weights]
+        ).to_batches()
 
 
 def _signatures(spark, sf_dir):
     emb = _emb(spark, sf_dir).select("vec_id", "vec")
-
-    def kernel(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        planes = _plane_matrix(N_PLANES)
-        weights = (1 << np.arange(N_PLANES)).astype(np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            bits = _sig_bits(pdf["vec"], planes)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "bucket": bits @ weights,
-                }
-            )
-
-    return emb.mapInPandas(kernel, schema="vec_id long, bucket long")
+    return emb.mapInArrow(_signatures_kernel, schema=SIG_DDL)
 
 
 def ann_lsh_bucketed(spark, sf_dir):
@@ -550,35 +557,37 @@ def _planted_emb(spark, sf_dir):
     return emb.unionByName(planted)
 
 
+MB_SIG_DDL = "vec_id long, band int, bucket long"
+
+
+def _multiband_kernel(batches):
+    """mapInArrow kernel: (vec_id, vec) -> ``MB_SIG_DDL``, MB_BANDS rows
+    per vector, band-major within a batch."""
+    from .pipeline import _arrow_table, _numpy_of  # noqa: PLC0415
+
+    planes = _plane_matrix(MB_BANDS * MB_ROWS)
+    weights = (1 << np.arange(MB_ROWS)).astype(np.int64)
+    for rb in batches:
+        n = rb.num_rows
+        if n == 0:
+            continue
+        bits = _sig_bits(rb.column("vec"), planes)  # (n, MB_BANDS*MB_ROWS)
+        buckets = bits.reshape(n, MB_BANDS, MB_ROWS) @ weights  # (n, MB_BANDS)
+        yield from _arrow_table(
+            MB_SIG_DDL,
+            [
+                np.tile(_numpy_of(rb.column("vec_id")), MB_BANDS),
+                np.repeat(np.arange(MB_BANDS), n),
+                buckets.T.ravel(),
+            ],
+        ).to_batches()
+
+
 def ann_lsh_multiband(spark, sf_dir):
     """Planted-pair recall of OR-amplified multi-band LSH.  Output: one
     row per planted near-dup pair (vec_a, vec_b, cosine, caught)."""
     allv = _planted_emb(spark, sf_dir)
-
-    def kernel(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        planes = _plane_matrix(MB_BANDS * MB_ROWS)
-        weights = (1 << np.arange(MB_ROWS)).astype(np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            bits = _sig_bits(pdf["vec"], planes)  # (n, MB_BANDS*MB_ROWS)
-            frames = []
-            for band in range(MB_BANDS):
-                sub = bits[:, band * MB_ROWS:(band + 1) * MB_ROWS]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"].astype("int64"),
-                            "band": band,
-                            "bucket": sub @ weights,
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    sig = allv.mapInPandas(kernel, schema="vec_id long, band int, bucket long")
+    sig = allv.mapInArrow(_multiband_kernel, schema=MB_SIG_DDL)
     # candidate pairs via bucket grouping (same zero-self-join pattern
     # as dedup_minhash_lsh)
     cand = (

@@ -52,7 +52,6 @@ import shutil
 import time
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,14 +87,36 @@ class ParquetManifestFormat:
         """Manifest rows, read with the declared ``MANIFEST_DDL``: the
         read starts no Spark job.  Files written before round 5 lack
         the ``seq`` column; it reads as null and is coalesced to 0.0
-        (older than any stamped row).  ``None`` if no manifest exists."""
-        try:
-            df = spark.read.schema(MANIFEST_DDL).parquet(
-                self.manifest_path(table_path)
-            )
-        except AnalysisException:
+        (older than any stamped row).  ``None`` if no manifest exists:
+        the directory is checked first, so a fresh table makes no
+        failing ``spark.read`` (whose error Spark logs with a stack
+        trace)."""
+        path = self.manifest_path(table_path)
+        if not os.path.isdir(path):
             return None
+        df = spark.read.schema(MANIFEST_DDL).parquet(path)
         return df.withColumn("seq", F.coalesce("seq", F.lit(0.0)))
+
+    def _max_seq(self, table_path: str) -> float | None:
+        """The largest ``seq`` in the manifest, read on the driver with
+        pyarrow from each file's ``seq`` column: no Spark job.  Files
+        written before round 5 have no ``seq`` (their rows read as 0.0,
+        below any clock) and are skipped, as are the hidden files
+        (``_SUCCESS``, ``.crc``) Spark's reader skips too.  ``None`` for
+        an absent or empty manifest."""
+        import pyarrow.parquet as pq  # noqa: PLC0415
+
+        path = self.manifest_path(table_path)
+        if not os.path.isdir(path):
+            return None
+        seqs = []
+        for name in os.listdir(path):
+            if name.startswith(("_", ".")):
+                continue
+            f = pq.ParquetFile(os.path.join(path, name))
+            if "seq" in f.schema_arrow.names:
+                seqs += f.read(columns=["seq"]).column("seq").to_pylist()
+        return max((v for v in seqs if v is not None), default=None)
 
     @staticmethod
     def _latest_rows(m: DataFrame, version: str) -> DataFrame:
@@ -125,8 +146,8 @@ class ParquetManifestFormat:
         the manifest's current max — a backwards NTP step between a
         commit and a later tombstone must not let the commit win
         ``_latest_rows`` (r5 review finding; the clock alone is not
-        monotone).  One tiny manifest read per commit — commits are
-        per-JOB events, not per-row."""
+        monotone).  The floor is read on the driver (``_max_seq``), so
+        the manifest write is the commit's only Spark job."""
         rows = [(p, version) for p in written]
         rows += [(p, TOMBSTONE) for p in deleted]
         if not rows:
@@ -137,11 +158,9 @@ class ParquetManifestFormat:
                 ignore_errors=True,
             )
         now = time.time()
-        m = self.read_manifest(spark, table_path)
-        if m is not None:
-            last = m.agg(F.max("seq")).collect()[0][0]
-            if last is not None and now <= last:
-                now = last + 1e-3
+        last = self._max_seq(table_path)
+        if last is not None and now <= last:
+            now = last + 1e-3
         local_df(
             spark, [(p, v, now) for p, v in rows], MANIFEST_DDL
         ).coalesce(1).write.mode("append").parquet(self.manifest_path(table_path))

@@ -99,13 +99,13 @@ def test_minhash_scans_documents_once(spark):
     assert "Join" not in plan  # pairs come from in-bucket expansion
 
 
-def test_lsh_signature_is_single_mapinpandas(spark):
+def test_lsh_signature_is_single_mapinarrow(spark):
     # hyperplane signatures must be the in-batch matmul kernel, not the
     # 512-rows-per-vector posexplode x crossJoin shuffle
     from doclayout_yolo_spark.queries_vector import _signatures
 
     plan = plan_of(_signatures(spark, SF_DIR), "simple")
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
     assert "Generate" not in plan  # no posexplode
     assert "Join" not in plan
 

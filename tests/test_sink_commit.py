@@ -1,6 +1,8 @@
 """The sink's commit path: one lineage file and one manifest file per
 job, manifest and lineage read with their declared schemas (no
-schema-merge job), and the public names the benchmark imports."""
+schema-merge job), a commit whose only Spark job is its write, no
+manifest read on a table that has none, and the public names the
+benchmark imports."""
 
 from __future__ import annotations
 
@@ -23,7 +25,8 @@ from doclayout_yolo_spark.pipeline import (
     stale_buckets,
     with_part_id,
 )
-from doclayout_yolo_spark.tableformat import FORMAT, TOMBSTONE
+from doclayout_yolo_spark.session import local_df
+from doclayout_yolo_spark.tableformat import FORMAT, MANIFEST_DDL, TOMBSTONE
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_BUCKETS = 8
@@ -118,6 +121,40 @@ def test_manifest_reads_start_no_schema_job(spark, table):
     _, collect_jobs = _jobs_of(spark, latest.collect)
     stale, jobs = _jobs_of(spark, lambda: stale_buckets(spark, out))
     assert stale == [] and len(jobs) == len(collect_jobs)
+
+
+def test_commit_starts_no_job_besides_its_write(spark, tmp_path_factory):
+    # the seq floor is read on the driver: the commit's jobs are those
+    # of a bare manifest-file write
+    base = tmp_path_factory.mktemp("commit_jobs")
+    out = str(base / "t")
+    FORMAT.commit(spark, out, KERNEL_VERSION, written=[1])
+    _, jobs = _jobs_of(
+        spark,
+        lambda: FORMAT.commit(spark, out, KERNEL_VERSION, written=[2], deleted=[1]),
+    )
+    _, write_jobs = _jobs_of(
+        spark,
+        lambda: local_df(spark, [(2, KERNEL_VERSION, 1.0)], MANIFEST_DDL)
+        .coalesce(1).write.mode("append").parquet(str(base / "bare")),
+    )
+    assert len(jobs) == len(write_jobs) >= 1
+    rows = FORMAT.read_manifest(spark, out).collect()
+    assert len(rows) == 3 and len({r["seq"] for r in rows}) == 2
+
+
+def test_missing_table_makes_no_spark_read(spark, tmp_path, monkeypatch):
+    from pyspark.sql.readwriter import DataFrameReader
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("spark.read on a table with no manifest")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    out = str(tmp_path / "absent")
+    assert FORMAT.read_manifest(spark, out) is None
+    assert FORMAT.committed_buckets(spark, out, KERNEL_VERSION) is None
+    assert FORMAT.stale_buckets(spark, out, KERNEL_VERSION) == []
+    assert FORMAT.reconcile(spark, out) == []
 
 
 def test_legacy_manifest_file_reads_seq_zero(spark, tmp_path_factory):
