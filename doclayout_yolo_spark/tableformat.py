@@ -68,7 +68,9 @@ MANIFEST_DDL = "part_id int, kernel_version string, seq double"
 class ParquetManifestFormat:
     """The sandbox table format: hash-bucketed parquet partitions under
     ``<table>/data`` + the append-only manifest under
-    ``<table>/_manifest`` (+ the lineage side table)."""
+    ``<table>/_manifest`` (+ the lineage side table).  ``table_path`` is
+    a local filesystem path: the manifest's existence, its ``seq``
+    floor and the orphan partitions are read with ``os``."""
 
     # -- paths ------------------------------------------------------------
     def data_path(self, table_path: str) -> str:
